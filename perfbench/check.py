@@ -1,22 +1,27 @@
-"""Output checks: canonical row sets and the DuckDB oracle connection.
+"""Output checks against DuckDB oracles.
 
-A Spark result and a DuckDB oracle result match when they have the same
-column names (in any order), the same number of rows and, after sorting
+The comparison is the catalog correctness gate's own, imported from
+``tests/oracle.py``: the same column names in any order and, after sorting
 columns by name, rounding floats to 6 places and sorting rows, the same
-values. This is the comparison the catalog's own correctness gate makes.
+values. ``tests.oracle`` imports the engine package, so it is imported
+only when a check runs, after every timed set-up.
 """
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 
 
-def duckdb_views(paths: dict[str, str]) -> duckdb.DuckDBPyConnection:
+def star_views(star_dir: str) -> duckdb.DuckDBPyConnection:
+    """The oracle connection over the star-schema tables in ``star_dir``."""
+    from tests.oracle import duckdb_con
+
+    return duckdb_con(star_dir)
+
+
+def parquet_views(paths: dict[str, str]) -> duckdb.DuckDBPyConnection:
     """A DuckDB connection with one view per ``name → parquet glob``."""
     con = duckdb.connect()
-    con.execute("SET threads TO 2")  # checks run after timing; stay small
     for name, path in paths.items():
         con.execute(
             f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
@@ -24,21 +29,11 @@ def duckdb_views(paths: dict[str, str]) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _canon(value):
-    if value is None:
-        return None
-    if isinstance(value, float):
-        return "NaN" if math.isnan(value) else round(value, 6)
-    if isinstance(value, (list, tuple)):
-        return tuple(_canon(v) for v in value)
-    return value
-
-
 def canonical(columns: list[str], rows: list[tuple]) -> tuple:
     """Order-insensitive, float-rounded form of a result set."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    shaped = [tuple(_canon(r[i]) for i in order) for r in rows]
-    return (tuple(sorted(columns)), tuple(sorted(shaped, key=repr)))
+    from tests.oracle import rows_canonical
+
+    return (tuple(sorted(columns)), rows_canonical(columns, rows))
 
 
 def oracle(con: duckdb.DuckDBPyConnection, sql: str) -> tuple:

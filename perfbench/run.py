@@ -9,9 +9,10 @@ Usage (from the repository root):
         --seed N --seconds S --trace {0,1} [--size {full,tiny}]
 
 One run generates its inputs from ``--seed`` (data generation is not
-timed), sets the engine up several times, runs one cold pass over the
-workload's statements and then as many steady passes as ``--seconds``
-buys, and checks every output. The last stdout line is one JSON
+timed), sets the engine up once, cold (import, JVM start, input
+registration), runs one cold pass over the workload's statements, any
+warm-up passes and then as many steady passes as ``--seconds`` buys, and
+checks every output. The last stdout line is one JSON
 object ``{"correct", "attempted", "failed", "metrics"}``: the end-to-end
 metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``.
 A traced run also writes its spans to ``perfbench/out/``. Run details
@@ -36,17 +37,26 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "amsterdam_map_data_wrangling_spark"
 WORKLOADS = ("osm_etl", "catalog")
-#: engine set-ups per run; ``setup_s`` is their median
-N_SETUPS = 3
-#: nominal seconds of one steady pass; ``--seconds`` buys one pass per
-#: PASS_SECONDS
-PASS_SECONDS = 5
+#: passes after the cold one that only warm the JVM up and are not
+#: measured. Without JIT time, the second pass of either workload costs
+#: about 10 % more than the third. The ETL's passes are short enough to
+#: drop one; a catalog pass costs 8-10 s, which 48 runs within an hour
+#: cannot spare, so its median falls on the second steady pass instead.
+WARMUP_PASSES = {"osm_etl": 1, "catalog": 0}
+#: nominal seconds of one steady pass (4-8 s on a 4-core host);
+#: ``--seconds`` buys one steady pass per PASS_SECONDS
+PASS_SECONDS = 6
+#: fewest steady passes a run measures
+MIN_STEADY_PASSES = 3
 
 #: Gated metrics. Pass costs are CPU seconds of the whole process tree
 #: (Python driver, JVM, Spark's Python workers), not wall time: on a shared
 #: VM whose hypervisor took 17-20 % of the CPUs away, a steady pass took
-#: 60 % more wall time but 15 % more CPU time. Wall times are reported
-#: too, as ``bench.*`` metrics of the traced run and in the details file.
+#: 60 % more wall time but 15 % more CPU time. A steady pass's CPU time
+#: leaves out the JVM's JIT compilation, which falls pass after pass for
+#: the first ten passes (from about 60 % of a pass's CPU time to 30-40 %)
+#: and is reported as ``jvm.jit_s``. Wall times are reported too, as ``bench.*`` metrics
+#: of the traced run and in the details file.
 END_TO_END = {
     "setup_s": "s",
     "first_pass_cpu_s": "s",
@@ -99,6 +109,7 @@ PER_LAYER = {
     "trace.wall_s": "s",
     "trace.overhead_ratio": "ratio",
     "trace.accounted_ratio": "ratio",
+    "jvm.jit_s": "s",
     **{f"plans.{f}.{k}": "s" for f in FAMILIES for k in ("build_s", "exec_s")},
 }
 
@@ -122,7 +133,7 @@ def steady_passes(seconds: float) -> int:
     so each pass is cheaper than the last. A deadline would run more passes
     on a fast host than on a slow one and shift the median with host speed;
     a count fixed by ``--seconds`` alone keeps the statistic the same."""
-    return max(2, round(seconds / PASS_SECONDS))
+    return max(MIN_STEADY_PASSES, round(seconds / PASS_SECONDS))
 
 
 def _process_tree(root: int) -> dict[int, int]:
@@ -152,6 +163,13 @@ def _process_tree(root: int) -> dict[int, int]:
 
 def _tree_cpu_s(root: int) -> float:
     return sum(_process_tree(root).values()) / os.sysconf("SC_CLK_TCK")
+
+
+def _jit_s(spark) -> float:
+    """Seconds the JVM's JIT compilers have spent compiling so far, as the
+    JVM itself accounts them."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return mf.getCompilationMXBean().getTotalCompilationTime() / 1e3
 
 
 def _steal_ticks() -> tuple[int, int]:
@@ -199,7 +217,6 @@ def _prepare_env(work: str) -> None:
     # no hsperfdata file in the system temp directory
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(_nproc()))
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
 
 
 class Bench:
@@ -222,19 +239,15 @@ class Bench:
         #: (statement, pass, columns, rows) of every statement that returned
         self.results: list[tuple[str, int, list[str], list]] = []
         self.passes: list[dict] = []
-        self.setups: list[float] = []
+        self.setup_s = 0.0
 
     # ---- set-up -------------------------------------------------------
 
     def setup(self) -> None:
-        """Package import + ``get_spark`` + input registration, timed."""
+        """Package import + ``get_spark`` (which starts the JVM) + input
+        registration, timed. Runs once per process, before anything else
+        imports the package."""
         t0 = time.perf_counter()
-        if self.spark is not None:
-            from amsterdam_map_data_wrangling_spark.sources import registry
-
-            self.spark.stop()
-            registry.clear_cache()
-            t0 = time.perf_counter()
         from amsterdam_map_data_wrangling_spark.plans import catalog
         from amsterdam_map_data_wrangling_spark.session import get_spark
 
@@ -262,7 +275,7 @@ class Bench:
             self.builds, self.oracles = catalog.queries(), catalog.oracle_sql()
             with self.tracer.span("sources.load_tables"):
                 load_tables(self.spark, self.inputs.star_dir)
-        self.setups.append(time.perf_counter() - t0)
+        self.setup_s = time.perf_counter() - t0
 
     # ---- passes -------------------------------------------------------
 
@@ -342,11 +355,13 @@ class Bench:
         self.passes[-1]["rows_out"] = sum(rows.values())
         self.passes[-1]["output_bytes"] = self.wl.dir_bytes(out_dir)
 
-    def run_pass(self, pass_no: int, traced: bool) -> None:
+    def run_pass(self, pass_no: int, kind: str, traced: bool = False) -> None:
+        """One pass over the workload's statements; ``kind`` is ``cold``,
+        ``warmup`` or ``steady``."""
         self.tracer.enabled = traced
         self.tracer.tags = {"pass": pass_no}
-        self.passes.append({"pass": pass_no, "traced": traced})
-        steal0, cpu0 = _steal_ticks(), _tree_cpu_s(os.getpid())
+        self.passes.append({"pass": pass_no, "kind": kind, "traced": traced})
+        steal0, cpu0, jit0 = _steal_ticks(), _tree_cpu_s(os.getpid()), _jit_s(self.spark)
         t0 = time.perf_counter()
         with self.tracer.span("bench.pass"):
             if self.args.workload == "osm_etl":
@@ -358,6 +373,7 @@ class Bench:
         self.passes[-1].update(
             wall_s=wall,
             cpu_s=_tree_cpu_s(os.getpid()) - cpu0,
+            jit_s=_jit_s(self.spark) - jit0,
             steal_share=(steal1[0] - steal0[0]) / max(steal1[1] - steal0[1], 1),
             latencies=lat,
         )
@@ -391,19 +407,22 @@ class Bench:
 
     # ---- metrics ------------------------------------------------------
 
+    def _steady(self, traced: bool = False) -> list[dict]:
+        return [p for p in self.passes if p["kind"] == "steady" and p["traced"] == traced]
+
     def end_to_end(self) -> dict[str, float]:
-        steady = [p for p in self.passes[1:] if not p["traced"]]
+        steady = self._steady()
         return {
-            "setup_s": statistics.median(self.setups),
+            "setup_s": self.setup_s,
             "first_pass_cpu_s": self.passes[0]["cpu_s"],
-            "cpu_s": statistics.median(p["cpu_s"] for p in steady),
+            "cpu_s": statistics.median(p["cpu_s"] - p["jit_s"] for p in steady),
             "peak_rss_mb": self.peak_rss_mb,
         }
 
     def wall_times(self) -> dict[str, float]:
         """What a user waiting on the run sees: the cold pass, the median
         untraced steady pass and the median statement latency."""
-        steady = [p for p in self.passes[1:] if not p["traced"]]
+        steady = self._steady()
         return {
             "bench.first_pass_s": self.passes[0]["wall_s"],
             "bench.wall_s": statistics.median(p["wall_s"] for p in steady),
@@ -419,14 +438,12 @@ class Bench:
         for name, key in (("session.start", "session.start_s"),
                           ("sources.load_tables", "sources.load_tables_s"),
                           ("sources.read_osm", "sources.read_osm_s")):
-            durs = [s["end"] - s["start"] for s in setup_spans if s["name"] == name]
-            if durs:
-                m[key] = statistics.median(durs)
+            m[key] = sum(s["end"] - s["start"] for s in setup_spans if s["name"] == name)
         m["sources.load_tables_calls"] = sum(
             s["name"] == "sources.load_tables" for s in setup_spans
-        ) / max(len(self.setups), 1)
+        )
 
-        traced = [p for p in self.passes[1:] if p["traced"]]
+        traced = self._steady(traced=True)
         per_pass = [self._pass_layers(p) for p in traced]
         for key in per_pass[0]:
             m[key] = statistics.median(pp[key] for pp in per_pass)
@@ -491,6 +508,7 @@ class Bench:
         else:
             accounted = out["plans.build_s"] + out["plans.exec_s"]
         out["trace.accounted_ratio"] = accounted / p["wall_s"]
+        out["jvm.jit_s"] = p["jit_s"]
         for layer in ("bench", "plans", "pipeline", "osm_sql"):
             out[f"{layer}.self_s"] = sum(
                 tr.self_time(s) for s in spans if s["name"].split(".")[0] == layer
@@ -574,20 +592,23 @@ def run(args, work: str) -> dict:
     stamp["generate_s"] = time.perf_counter() - t
     bench = Bench(args, inputs, work)
     try:
-        for _ in range(N_SETUPS):
-            bench.setup()
+        bench.setup()
         import pyspark
 
         stamp["pyspark"] = pyspark.__version__
         if args.trace:
             _instrument_memo(bench.tracer)
-        bench.run_pass(0, traced=False)
+        bench.run_pass(0, "cold")
+        warmup = WARMUP_PASSES[args.workload]
+        for pass_no in range(1, warmup + 1):
+            bench.run_pass(pass_no, "warmup")
         # A traced run alternates untraced and traced passes, starting and
         # ending untraced, so the overhead estimate is not confounded with
-        # the warm-up trend of the first passes.
+        # what is left of the warm-up trend.
         n = steady_passes(args.seconds)
-        for pass_no in range(1, (2 * n if args.trace else n + 1)):
-            bench.run_pass(pass_no, traced=bool(args.trace) and pass_no % 2 == 0)
+        for i in range(2 * n - 1 if args.trace else n):
+            bench.run_pass(warmup + 1 + i, "steady",
+                           traced=bool(args.trace) and i % 2 == 1)
         bench.tracer.finish()
     finally:
         bench.close()
@@ -603,7 +624,7 @@ def run(args, work: str) -> dict:
         bench.tracer.write(base + ".spans.json")
     details = {
         "stamp": stamp,
-        "setups_s": bench.setups,
+        "setup_s": bench.setup_s,
         "peak_rss_mb": bench.rss_mb,
         "passes": bench.passes,
         "failures": bench.failures,

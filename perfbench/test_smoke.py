@@ -62,12 +62,19 @@ def test_per_layer_metrics_and_spans_nest(workload):
     result = _result(_run(workload, trace=1))
     _assert_metrics(result, BENCHMARK["per_layer"])
     metrics = {k: v["value"] for k, v in result["metrics"].items()}
-    assert metrics["trace.accounted_ratio"] > 0.5
+    # the README's stated slack: the layers' spans account for at least
+    # 90 % of a traced pass
+    assert metrics["trace.accounted_ratio"] >= 0.9
+    assert metrics["jvm.jit_s"] > 0
     if workload == "osm_etl":
         assert metrics["pipeline.etl_s"] > 0 and metrics["pipeline.rows_out"] > 0
     else:
         assert metrics["plans.build_s"] > 0 and metrics["plans.exec_jobs"] > 0
         assert metrics["plans.memo_calls"] > 0
+        # every plan family is on the measured path
+        for name, value in metrics.items():
+            if name.startswith("plans.") and name.count(".") == 2:
+                assert value > 0, name
 
     with open(os.path.join(HERE, "out", f"{workload}-seed3-trace1.spans.json")) as fh:
         spans = {s["id"]: s for s in json.load(fh)}

@@ -28,6 +28,20 @@ STAR_QUERIES = [
     "gap_log2_hist",             # r08_queue
 ]
 
+#: One query of every other ``plans`` family, each the cheapest of its
+#: family that has a DuckDB oracle, so that a change to any family module
+#: moves its ``plans.<family>.*`` metrics and the pass cost.
+FAMILY_QUERIES = [
+    "sliding_window_by_type",    # windows
+    "winsorize_price_stats",     # features
+    "cms_heavy_hitters",         # sketches
+    "normalize_phone_lengths",   # wrangling
+    "geo_way_lengths",           # geo
+    "multimodal_dims",           # multimodal
+    "embedding_label_stats",     # similarity
+    "bloom_vocab_overlap",       # sparse
+]
+
 #: LLM-corpus queries: two consumers of the shared near-duplicate memo
 #: (``plans.dedup``) — one reads the pair relation, one the components
 #: built on it — and per-document text statistics. The memo builds run
@@ -38,10 +52,10 @@ CORPUS_QUERIES = [
     "text_stats",                # text
 ]
 
-#: A ``catalog`` pass runs both groups in this order, so the first memo
+#: A ``catalog`` pass runs the groups in this order, so the first memo
 #: consumer (``dedup_ngram_jaccard``) always pays the pair build and the
 #: second the component build.
-CATALOG_QUERIES = STAR_QUERIES + CORPUS_QUERIES
+CATALOG_QUERIES = STAR_QUERIES + FAMILY_QUERIES + CORPUS_QUERIES
 
 
 @dataclass
@@ -96,9 +110,7 @@ def generate(workload: str, cfg: Config, seed: int, root: str) -> Inputs:
 def star_oracles(oracles: dict[str, str], star_dir: str) -> dict[str, tuple]:
     """DuckDB oracle results of the catalog queries over the generated
     tables."""
-    con = check.duckdb_views(
-        {t: os.path.join(star_dir, f"{t}.parquet") for t in gen_star.TABLES}
-    )
+    con = check.star_views(star_dir)
     try:
         return {n: check.oracle(con, sql) for n, sql in oracles.items()}
     finally:
@@ -108,7 +120,7 @@ def star_oracles(oracles: dict[str, str], star_dir: str) -> dict[str, tuple]:
 def osm_oracles(out_dir: str, statements: dict[str, str]) -> dict[str, tuple]:
     """DuckDB results of the README statements over the parquet the ETL
     wrote."""
-    con = check.duckdb_views(
+    con = check.parquet_views(
         {
             t: os.path.join(out_dir, t, "*.parquet")
             for t in ("nodes", "nodes_tags", "ways", "ways_tags", "ways_nodes")
