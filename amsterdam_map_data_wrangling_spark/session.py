@@ -17,6 +17,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ``spark.sql.codegen.cache.maxEntries`` for every session built here;
+#: see the comment at its ``.config`` call in :func:`get_spark`.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "amsterdam-map-data-wrangling-spark",
@@ -58,6 +62,21 @@ def get_spark(
         # plan-construction failure.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-class cache (an LRU keyed by the generated source).
+        # Spark's default of 100 entries is smaller than this catalog's
+        # working set: a cold pass over the 148 queries at sf0.01
+        # compiles ~1,800 distinct classes (the 16-query perfbench
+        # catalog ~230), so at 100 each class was evicted before its
+        # next use, and every pass recompiled ~2,340 classes in Janino
+        # and JIT-compiled them again. At 4096 a steady pass compiles
+        # 54-66 (perfbench catalog: 4-8), the few that Spark names
+        # differently per run (see README "Session defaults"). A class
+        # averages ~2.7 KB of bytecode. The conf is static: only
+        # sessions this function creates get it. A SparkSession built
+        # elsewhere keeps Spark's 100 — e.g. the one a verify run hands
+        # to ``__spark_entry__.entry`` — and so does one that
+        # getOrCreate below merely returns.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
@@ -70,3 +89,13 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count). In local mode
+    driver and executors share the JVM, so the difference around a
+    query is that query's codegen compile count."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

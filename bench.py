@@ -22,7 +22,10 @@ from amsterdam_map_data_wrangling_spark.plans.dedup import (  # noqa: E402
     clear_graph_memo,
 )
 from amsterdam_map_data_wrangling_spark.plans.queries import QUERIES  # noqa: E402
-from amsterdam_map_data_wrangling_spark.session import get_spark  # noqa: E402
+from amsterdam_map_data_wrangling_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 #: Host-drift canary (round-11 verdict #4): three rounds running, the
 #: headline delta was host drift proven only by a manual same-box
@@ -122,8 +125,10 @@ MAX_CLOSE_ATTEMPTS = 2
 def _timed_passes(spark, sf_dir: str):
     """Three timed passes over the catalog (min per query is the
     steady-state), canary-bracketed at each pass start and end.
-    Returns (passes, canary_samples, noise_med_over_min)."""
+    Returns (passes, canary_samples, noise_med_over_min, compiles), where
+    compiles[name] holds the Janino compile count of each timed run."""
     passes: dict[str, list[float]] = {name: [] for name in QUERIES}
+    compiles: dict[str, list[int]] = {name: [] for name in QUERIES}
     canary_samples: dict[str, list[float]] = {n: [] for n in CANARY_QUERIES}
     for _ in range(3):
         # session-shared graph relations (plans/dedup._GRAPH_MEMO) reset
@@ -144,12 +149,14 @@ def _timed_passes(spark, sf_dir: str):
             # (CacheManager matches canonicalized plans across invocations,
             # which would otherwise turn pass 2 into a cache read)
             spark.catalog.clearCache()
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = spec.build(spark, sf_dir)
             # noop sink: materializes every column of every row (a bare
             # .count() would let Catalyst prune the payload and under-measure)
             df.write.format("noop").mode("overwrite").save()
             passes[name].append(round(time.perf_counter() - t0, 4))
+            compiles[name].append(codegen_compiles(spark) - c0)
         # canary sample at pass END
         for n, t in _run_canary(spark, sf_dir).items():
             canary_samples[n].append(t)
@@ -164,7 +171,7 @@ def _timed_passes(spark, sf_dir: str):
         medians[n] / timings[n] for n in timings if timings[n] > 0
     )
     noise = round(ratios[len(ratios) // 2], 3) if ratios else 1.0
-    return passes, canary_samples, noise
+    return passes, canary_samples, noise, compiles
 
 
 def main() -> None:
@@ -199,7 +206,7 @@ def main() -> None:
             best = result
         if result[2] <= NOISE_GATE:
             break
-    passes, canary_samples, noise_med_over_min = best
+    passes, canary_samples, noise_med_over_min, compiles = best
     close_info = {
         "noise_gate": NOISE_GATE,
         "attempts_noise": attempts,
@@ -256,6 +263,10 @@ def main() -> None:
         "queries": timings,
         "passes": passes,
         "medians": medians,
+        # generated classes Janino compiled during each timed run (one
+        # entry per pass, aligned with "passes"): after the warm pass a
+        # non-zero count is codegen work repeated at steady state
+        "codegen_compiles": compiles,
         "noise_med_over_min": noise_med_over_min,
         "n_queries": len(timings),
         "mean_sec_per_query": round(total / max(len(timings), 1), 4),

@@ -13,3 +13,10 @@ def spark():
     spark = get_spark(app_name="amdw-tests", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+def pytest_collection_modifyitems(items):
+    # test_session measures codegen compiles from a cold generated-class
+    # cache, which the session-wide JVM only has before any other test
+    # has run a query: run that module first.
+    items.sort(key=lambda item: item.path.name != "test_session.py")

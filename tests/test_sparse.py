@@ -203,6 +203,22 @@ def test_decontaminate_removes_exactly_the_overlapping_docs(spark):
     assert len(kept) == 31 - 2
 
 
+def test_decontaminate_rejects_multi_column_contaminated_ids(spark):
+    """``contaminated_ids`` is read as the doc-id relation; a second
+    column would make the positional pick ambiguous, so it must fail
+    loudly instead of anti-joining on whichever column comes first."""
+    import pytest
+
+    from amsterdam_map_data_wrangling_spark.operators.sparse import (
+        decontaminate,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    two_cols = spark.createDataFrame([(7, 1)], "h long, id long")
+    with pytest.raises(ValueError, match="exactly one column"):
+        decontaminate(docs, docs, contaminated_ids=two_cols)
+
+
 def test_bloom_blocks_rejects_oversized_n_hashes(spark):
     """r6 ADVICE regression: md5 hex is 32 chars = four 8-char slices;
     a 5th hash position would slice past the digest and conv() NULLs
