@@ -84,100 +84,15 @@ def _load_all() -> None:
 
 
 #: Driver-gate priority: the correctness artifact records the FIRST 50
-#: registry entries, so ordering is evidence policy, not cosmetics. Front of
-#: the list: (a) queries with no driver verdict in the previous round's
-#: artifact, (b) queries whose implementation changed this round, (c) new
-#: queries. The complement (stable, previously hash-green) rotates to the
-#: back and re-enters in a later round. Names listed here must exist in the
-#: registry (typo guard in _ordered); registered queries not listed append
-#: in registration order.
-#:
-#: Capacity math (150 is the saturation CEILING; N = 148 as of r18:
-#: 150 − 5 retirements + 2 operator gates + 1 never-gated overflow):
-#: 100 verdict slots exist per 2 rounds, so with N > 100 a bounded
-#: tail of at most (N − 100) UNCHANGED queries ages to 3 rounds (never
-#: beyond; must hold a verdict from two artifacts back; parked
-#: immediately past slot 50) — enforced mechanically by
-#: tests/test_gate_freshness.py plus the oracle-definition ledger
-#: (ORACLE_HASHES.json).
-#:
-#: SATURATION DECISION (round 8, recorded per the r07 verdict ask and
-#: SURVEY §8): register ALL 24 queue pairs — the catalog lands exactly
-#: at N = 150 and the rotation becomes a permanent 3-round cycle with
-#: zero registration slack. Rationale: the queue families (drift, A/B,
-#: retention, spatial, basket, concentration, ...) are breadth a user
-#: of this engine would actually run, and rounds 9+ pivot to perf and
-#: depth work that needs no new gate slots. If a must-register operator
-#: ever appears, RETIRE a weak query for its slot rather than exceed
-#: the ceiling.
-#:
-#: RETIREMENT, exercised once at r08 (the mechanism above, made real):
-#: the r7 verdict asked for a driver-gated crawl-ingestion query
-#: "window permitting" — the window didn't permit, so the policy's
-#: escape hatch ran instead. `ilike_filter_count` (hash-green r01-r06;
-#: the lowest-marginal-evidence gate — a one-flag variant of
-#: like_filter_count, ILIKE semantics still pytest-compared in
-#: tests/test_retired.py) left the registry; `warc_roundtrip_stats`
-#: (plans/multimodal.py — the real _parse_warc against a string-algebra
-#: oracle) took a front slot; N stays exactly 150. One queue pair
-#: (gap_log2_hist, whose event-gap family already holds the gated
-#: event_gap_stats) waits one round as the bounded never-gated overflow
-#: parked at slot 51 — the retirement freed exactly one r09 front slot
-#: for it (49 r06-greens + gap_log2_hist = 50).
-#:
-#: Standing 3-round cycle (each round's 50 slots are owed in full to
-#: the cohort whose verdicts turn 3 rounds old):
-#:   r08 front = 26 r05-parks + 23 queue + warc_roundtrip_stats
-#:   r09 front = (OWED: gap_log2_hist + 49 r06-greens — round 9
-#:               stalled with zero commits, so the driver re-gated the
-#:               r08 front verbatim; CORRECTNESS_r09 == CORRECTNESS_r08
-#:               key-for-key)
-#:   r10 front = the owed r09 front, one round late
-#:   r11 front = the 50 r07-greens (pre-parked at r10's slots 51-100)
-#:   r12 front = the r08 front again (with the spatial_radius_pairs →
-#:               geo_way_lengths retirement swap)
-#:   r13 front = the r10 front again
-#:   r14 front = the r11 front again (with the three r14 oracle
-#:               re-contracts)
-#:   r15 front = the r12 front again (with the two r15 re-contracts)
-#:   r16 front = the r13 front again
-#:   r17 front = the r14 front again (section (v) below, with the
-#:               ann_rand_lsh → bound_doc_width_roundtrip retirement
-#:               swap)
-#:   r18 front = the r15 front again (with the five retirement swaps
-#:               and five entrants of section (ac)'s predecessor)
-#:   r19 front = the r16 cohort park + the jpeg_pixel_stats overflow +
-#:               two r18-optimization-changed queries in the spare
-#:               slots (changed-code rule), and so on.
-#: The r09 stall means BOTH parked cohorts exceeded the age-3 ceiling
-#: in wall-clock rounds; recovery is the fastest mathematically
-#: possible (oldest cohort first, the other parked immediately behind).
-#: tests/test_gate_freshness.py encodes the stalled-round recovery
-#: clause: a duplicated artifact collapses to one rotation window, so
-#: the ceiling is measured in distinct gate windows.
-#: Changed-code queries always jump their cohort into the next front,
-#: displacing an unchanged name one cycle later — the ledger test
-#: catches any verdict whose oracle definition drifted.
+#: registry entries, so this order is evidence policy. Front the
+#: queries with the oldest verdicts, those whose plan or oracle changed
+#: and new ones; park the next-oldest cohort right behind slot 50; the
+#: rest append in registration order. Every query keeps a verdict at
+#: most two distinct gate windows old, except a bounded tail of N - 100
+#: unchanged queries that may age to three (policy and checks in
+#: tests/test_gate_freshness.py; rotation history in PLANS.md "Gate
+#: rotation history").
 _GATE_PRIORITY: list[str] = [
-    # ---- round 19 rotation: front (slots 1-50) ----
-    # (ac) the 47 r16-front queries (the r10/r13 lineage cohort minus
-    #     the three adaptive-window levers fronted at r18), owed this
-    #     round's window in full (verdicts r16, three distinct windows
-    #     back after this round's gates), in their r16 gate order;
-    #     PLUS the never-gated r18 overflow jpeg_pixel_stats (first in
-    #     line per policy point 3); PLUS — in the two spare slots — two
-    #     of the r18-optimization-changed queries fronted out of cycle
-    #     per the changed-code rule and the r18 VERDICT's #9 ask (the
-    #     r18 driver sample covered none of the 15 changed paths):
-    #       near_dup_transitivity — the shared-pair-memo threshold-floor
-    #         rewrite's largest beneficiary (2.04 -> 0.45 s);
-    #       geo_nn_on_sphere — the packed-decimal top-1 aggregate +
-    #         row-count repartition window (the most structurally
-    #         changed plan of the round).
-    #     The remaining 13 r18-changed queries hold r17 verdicts and
-    #     re-front with their cohort at r20 (two windows back — within
-    #     the ceiling). NO retirements this round (an optimization
-    #     round must not drop queries); N stays 148.
     "dedup_keep_canonical",
     "dedup_edit_refine",
     "audio_dims",
@@ -229,11 +144,6 @@ _GATE_PRIORITY: list[str] = [
     "near_dup_transitivity",
     "geo_nn_on_sphere",
     # ---- window boundary (slot 50) ----
-    # (ad) park: the 48 remaining r17-front queries (minus the two
-    #     fronted above), in their r17 gate order — their verdict
-    #     window is r17, two distinct windows back after this round's
-    #     front gates; parked immediately past the window so they are
-    #     r20's front. NO oracle changes touch this cohort this round.
     "dedup_exact_groups",
     "dedup_ngram_jaccard",
     "dedup_minhash_pairs",
@@ -282,10 +192,6 @@ _GATE_PRIORITY: list[str] = [
     "variant_json_stats",
     "null_semantics_audit",
     "xml_roundtrip_stats",
-    # (ae) the 50 r18-front queries (verdicts r18, the freshest
-    #     cohort) are deliberately unlisted — they append in
-    #     registration order behind the park and become r21's front:
-    #     geo_way_lengths, ..., compaction_plan_ffd.
 ]
 
 

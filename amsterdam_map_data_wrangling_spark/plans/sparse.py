@@ -46,14 +46,11 @@ def shared_sparse_pairs(spark, sf_dir, df_cap=50):
         sparse_cosine_pairs,
     )
     from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        _GRAPH_MEMO,
         _memo_key,
-        _memo_put,
+        memo_get_or_build,
     )
 
-    key = _memo_key(spark, sf_dir, "sparse_pairs", None, df_cap)
-    pairs = _GRAPH_MEMO.get(key)
-    if pairs is None:
+    def build():
         (documents,) = _t(spark, sf_dir, "documents")
         # tf is built INLINE from the parquet scan, not via a shared
         # checkpoint: the token-proportional relations (term_tf, grams)
@@ -61,15 +58,16 @@ def shared_sparse_pairs(spark, sf_dir, df_cap=50):
         # under whole-stage codegen — only the small, join-expensive pair
         # relation clears the materialization bar (see PLANS.md round-10
         # "what does NOT pay to share").
-        pairs = sparse_cosine_pairs(
+        return sparse_cosine_pairs(
             documents.select("doc_id", "text"),
             "doc_id",
             "text",
             threshold=0.0,
             df_cap=df_cap,
         ).localCheckpoint()
-        _memo_put(key, pairs)
-    return pairs
+
+    key = _memo_key(spark, sf_dir, "sparse_pairs", None, df_cap)
+    return memo_get_or_build(key, build)
 
 
 _SPARSE_COSINE_ORACLE = r"""

@@ -1,11 +1,22 @@
 #!/usr/bin/env python
-"""Headline benchmark: run every catalog query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-short JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {top-10 slowest: sec}, "n_queries": ..., "sf": ...,
-"queries_file": "bench_results.json"} — the FULL per-query map is written
-to bench_results.json next to this script (the driver's stdout capture
-keeps only ~2 KB, which a 74-query map exceeds).
+"""Catalog benchmark, and the one timing loop for catalog queries.
+
+Usage: python bench.py [QUERY ...]
+
+Runs every catalog query (or the named ones) at $SPARK_GRAFT_SF_DIR
+(default CANARY_SF_DIR, the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS]: one untimed warm pass, then three timed
+passes, min per query. Prints ONE short JSON
+line on stdout: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {slowest first: sec}, "n_queries": ..., "sf": ...,
+"queries_file": "bench_results.json"}; the full per-query record
+(every pass, split into build and exec) goes to bench_results.json
+next to this script. One progress line per timed query goes to stderr.
+Exits 1 when a query raises or runs over $SPARK_GRAFT_BUDGET_SEC.
+
+`run_query`, `run_pass`, `run_canary` and `canary_ratio` are the
+helpers the probes in scripts/ call. README "bench.py" documents the
+protocol, the result fields and the history of the constants below.
 """
 
 from __future__ import annotations
@@ -15,6 +26,8 @@ import os
 import re
 import sys
 import time
+import traceback
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -27,186 +40,192 @@ from amsterdam_map_data_wrangling_spark.session import (  # noqa: E402
     get_spark,
 )
 
-#: Host-drift canary (round-11 verdict #4): three rounds running, the
-#: headline delta was host drift proven only by a manual same-box
-#: worktree A/B. Instead, every bench run times this pinned set at the
-#: start AND end of each timed pass and reports the ratio of its medians
-#: to a quiet-window baseline, so BENCH_r{N} artifacts self-explain:
-#: canary_ratio ~1.0 → the box runs at baseline speed and cross-round
-#: deltas are real; ~1.3 → the box is 1.3x slow today and the headline
-#: must be read through value_normalized. The three queries are chosen
-#: stable (plans untouched since r07), CPU-meaningful (~1 s each at
-#: sf0.1 — timer noise is <5%), plan-diverse (window+agg / hash+shuffle
-#: / scan+broadcast), and NOT consumers of the shared graph memo (a
-#: canary must not pre-pay another query's build).
+#: Host-drift canary: stable, ~1 s, plan-diverse queries that share no
+#: memo with the catalog, timed at each pass start and end.
 CANARY_QUERIES = (
     "robust_z_by_priority",
     "dedup_simhash_bands",
     "winsorize_price_stats",
 )
-#: Calibration constants the ratio is measured against — RE-PINNED at
-#: the round-18 close (the r14 precedent: four rounds of drift against
-#: a fixed pin compounds pin error into every cross-round claim). The
-#: re-pin itself needed care: of three same-day r18 closes, the FIRST
-#: landed in a transiently fast host window (canaries 0.871 x the r14
-#: pins while the heavy queries were merely flat-to-faster raw — a
-#: one-reading re-pin there would have built the fast window into
-#: every future ratio); the second and third closes agree within 0.2%
-#: (canary 1.196 / 1.195 against that fast reading, i.e. ~1.042 x the
-#: r14 pins — mild aging, not a break). Pins = the third close's
-#: 6-bracketed-sample canary medians (80.49 s catalog total, 148
-#: queries, noise 1.100, close_accepted true, over_budget empty).
-#: BOUNDARY DOCUMENTATION for cross-epoch comparison: new_pin ≈
-#: 1.042 x r14_pin on the same box — to compare a post-r18
-#: value_normalized against a pre-r18 one, DIVIDE the post-r18 number
-#: by 1.042 to express it in the r14-pin epoch (r17's quiet 74.5
-#: normalized ≡ 77.6 in the r18-pin epoch; the r12 epoch chains
-#: through the r14 boundary factor 1.095). Old pins (r14 close):
-#: robust_z 1.2183, simhash_bands 0.9951, winsorize 0.8982 — kept here
-#: and in git history so every epoch is recoverable. Valid for the
-#: default sf0.1 / local[32] config only; at any other sf the ratio is
-#: reported as null.
-#: r18-OPTIMIZATION epoch boundary (second re-pin of round 18): the
-#: optimization pass sped up the CANARY QUERIES THEMSELVES (the
-#: engine-wide dataFrameDebugging=false plan-construction cut plus
-#: shared-path effects), so the canary stopped being a pure host-speed
-#: witness against the r18-build pins — a post-opt run on a 1.36x-slow
-#: host read canary_ratio 1.066 and OVERSTATED value_normalized by
-#: ~27%. Re-derivation, from a back-to-back same-host-window worktree
-#: A/B (round-open code 104.73 s raw @ canary 1.359 vs HEAD 88.76 s @
-#: 1.066, both closes quiet, noise 1.081/1.113): per-canary code
-#: speedup s(q) = open_median(q)/head_median(q) (1.230 / 1.483 /
-#: 1.233), new_pin(q) = r18-build pin(q) / s(q). Consistency witness:
-#: under these pins the HEAD leg's canary_ratio recomputes to exactly
-#: the open leg's 1.359 — the ratio again reads host speed only.
-#: BOUNDARY DOCUMENTATION: post-opt value_normalized numbers are
-#: directly comparable to r18-build-epoch numbers (the pins absorb the
-#: code change); the r18-build close of 80.49 normalized corresponds
-#: to 65.31 at this HEAD (0.847x, the same-box raw ratio). Old pins
-#: (r18-build close): robust_z 1.2035, simhash_bands 1.0701,
-#: winsorize 0.9688 — kept here and in git history so every epoch is
-#: recoverable; earlier epochs chain through the factors documented at
-#: each prior re-pin.
+#: Quiet-window canary medians at sf0.1 (r18 optimization-pass pins).
 CANARY_BASELINE_SEC = {
     "robust_z_by_priority": 0.9785,
     "dedup_simhash_bands": 0.7214,
     "winsorize_price_stats": 0.7856,
 }
+#: The directory the pins were measured on; the canary always runs here.
+CANARY_SF_DIR = "/root/testdata/sf0.1"
 
-
-def _run_canary(spark, sf_dir: str) -> dict[str, float]:
-    """One timed run of each canary query (cache cleared, noop sink) —
-    same measurement protocol as the main loop."""
-    out: dict[str, float] = {}
-    for name in CANARY_QUERIES:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        QUERIES[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[name] = round(time.perf_counter() - t0, 4)
-    return out
-
-
-#: Close-decidability gate (r17 verdict "What's wrong" #1: five
-#: same-day r17 closes spanned ±7% normalized, and the committed
-#: artifact happened to land on the noisiest reading — the protocol
-#: let one noisy canary set the artifact number). A close whose
-#: noise_med_over_min exceeds this gate is NOT accepted as-is: the
-#: timed passes re-run once and the QUIETER of the two closes becomes
-#: the artifact (both noise readings are recorded under "close" so the
-#: retry is auditable). 1.15 sits above every quiet-box close on
-#: record (1.03-1.10) and below every reading that round-over-round
-#: comparison later had to discard (1.23+).
+#: Timed passes per close; the min per query is the steady state.
+PASSES = 3
+#: A close noisier than this re-runs once and the quieter close is kept.
 NOISE_GATE = 1.15
 MAX_CLOSE_ATTEMPTS = 2
+#: stdout line cap: the harness reading it keeps only the last ~2 KB.
+LINE_BYTE_BUDGET = 1800
 
 
-def _timed_passes(spark, sf_dir: str):
-    """Three timed passes over the catalog (min per query is the
-    steady-state), canary-bracketed at each pass start and end.
-    Returns (passes, canary_samples, noise_med_over_min, compiles), where
-    compiles[name] holds the Janino compile count of each timed run."""
-    passes: dict[str, list[float]] = {name: [] for name in QUERIES}
-    compiles: dict[str, list[int]] = {name: [] for name in QUERIES}
-    canary_samples: dict[str, list[float]] = {n: [] for n in CANARY_QUERIES}
-    for _ in range(3):
-        # session-shared graph relations (plans/dedup._GRAPH_MEMO) reset
-        # per PASS, not per query: each pass pays the near-dup pair build
-        # once — the cost of running the suite once — and the consumers
-        # measure the shared-read path they actually run in a composed
-        # pipeline. (Per-query reset would un-share what the queries
-        # deliberately share; no reset would hide the build in the warm
-        # pass and never time it.)
-        clear_graph_memo()
-        # canary sample at pass START (and again at pass end below):
-        # bracketing each pass catches drift that develops mid-run
-        for n, t in _run_canary(spark, sf_dir).items():
-            canary_samples[n].append(t)
-        for name, spec in QUERIES.items():
-            # a few operators persist() self-join hubs; drop those cache
-            # entries so every timed run re-executes its full lineage
-            # (CacheManager matches canonicalized plans across invocations,
-            # which would otherwise turn pass 2 into a cache read)
-            spark.catalog.clearCache()
-            c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            df = spec.build(spark, sf_dir)
-            # noop sink: materializes every column of every row (a bare
-            # .count() would let Catalyst prune the payload and under-measure)
-            df.write.format("noop").mode("overwrite").save()
-            passes[name].append(round(time.perf_counter() - t0, 4))
-            compiles[name].append(codegen_compiles(spark) - c0)
-        # canary sample at pass END
-        for n, t in _run_canary(spark, sf_dir).items():
-            canary_samples[n].append(t)
+def _median(xs):
+    return sorted(xs)[len(xs) // 2]
 
-    timings = {name: min(ts) for name, ts in passes.items()}
-    medians = {name: sorted(ts)[len(ts) // 2] for name, ts in passes.items()}
-    # one-number host-noise witness: median over queries of (median/min).
-    # ~1.0x-1.1x → quiet box, mins are trustworthy steady-state; >1.3x →
-    # the host was noisy and cross-round min drift is not evidence of a
-    # plan regression.
-    ratios = sorted(
-        medians[n] / timings[n] for n in timings if timings[n] > 0
-    )
-    noise = round(ratios[len(ratios) // 2], 3) if ratios else 1.0
-    return passes, canary_samples, noise, compiles
+
+def run_query(spark, spec, sf_dir: str) -> dict:
+    """Time one run of ``spec``: ``build(spark, sf_dir)``, then a noop
+    sink. Returns seconds for ``total``, ``build`` and ``exec``, the
+    Spark jobs that ran inside ``build`` and the classes Janino compiled.
+    """
+    sc = spark.sparkContext
+    group = f"bench-build-{uuid.uuid4().hex}"
+    # a few operators persist() self-join hubs; drop those cache entries
+    # so every run re-executes its full lineage
+    spark.catalog.clearCache()
+    c0 = codegen_compiles(spark)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        t0 = time.perf_counter()
+        df = spec.build(spark, sf_dir)
+        t1 = time.perf_counter()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # noop sink: materializes every column of every row (a bare .count()
+    # would let Catalyst prune the payload)
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    compiles = codegen_compiles(spark) - c0
+    # job events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return {
+        "total": round(t2 - t0, 4),
+        "build": round(t1 - t0, 4),
+        "exec": round(t2 - t1, 4),
+        "build_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        "compiles": compiles,
+    }
+
+
+def run_pass(spark, sf_dir: str, specs: dict, label: str, pool_map=map):
+    """Run each of ``specs`` ({name: spec}) once after a shared-memo
+    reset, through ``pool_map`` (``map`` runs them in order; a thread
+    pool's ``map`` runs them concurrently). Returns (runs, errors): the
+    run_query record per name, and "Type: message" per query that
+    raised. A progress line per query goes to stderr, so when the
+    process dies the query after the last line is the one that killed it.
+    """
+    # the session-shared relations (plans/dedup._GRAPH_MEMO) reset per
+    # pass, not per query: each pass pays their builds once, and their
+    # consumers time the shared read they run in a composed pipeline
+    clear_graph_memo()
+
+    def one(name):
+        try:
+            run = run_query(spark, specs[name], sf_dir)
+        except Exception as exc:  # recorded; the other queries still run
+            print(f"{label} ERROR {name}", file=sys.stderr, flush=True)
+            traceback.print_exc()
+            return f"{type(exc).__name__}: {exc}"[:300]
+        print(
+            f"{label} {run['total']:8.3f}s (build {run['build']:.3f}s, "
+            f"{run['build_jobs']} jobs) {name}",
+            file=sys.stderr,
+            flush=True,
+        )
+        return run
+
+    runs: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for name, out in zip(specs, pool_map(one, specs)):
+        if isinstance(out, str):
+            errors[name] = out
+        else:
+            runs[name] = out
+    return runs, errors
+
+
+def run_canary(spark, samples: dict | None = None) -> dict[str, list[float]]:
+    """Append one timed run of each canary query at CANARY_SF_DIR to
+    ``samples`` ({name: [sec, ...]}) and return it."""
+    samples = {} if samples is None else samples
+    for name in CANARY_QUERIES:
+        run = run_query(spark, QUERIES[name], CANARY_SF_DIR)
+        samples.setdefault(name, []).append(run["total"])
+    return samples
+
+
+def canary_ratio(samples: dict[str, list[float]]) -> float | None:
+    """Median over the canary queries of (median sample / pin): ~1.0 on
+    a box at baseline speed, None without samples."""
+    if not samples:
+        return None
+    ratios = [
+        _median(samples[n]) / CANARY_BASELINE_SEC[n] for n in CANARY_QUERIES
+    ]
+    return round(_median(ratios), 3)
+
+
+def timed_passes(spark, sf_dir: str, specs: dict, canary: bool = True):
+    """PASSES timed passes over ``specs``, canary-bracketed at each pass
+    start and end when ``canary``. Returns (runs, errors, canary
+    samples, noise): runs[name] lists the run_query record of each pass
+    the query completed, and noise is the median over queries of
+    median/min time (~1.0-1.1 on a quiet box)."""
+    runs: dict[str, list[dict]] = {name: [] for name in specs}
+    errors: dict[str, str] = {}
+    samples: dict[str, list[float]] = {}
+    for i in range(PASSES):
+        if canary:
+            run_canary(spark, samples)
+        pass_runs, pass_errors = run_pass(
+            spark, sf_dir, specs, f"pass {i + 1}/{PASSES}"
+        )
+        for name, run in pass_runs.items():
+            runs[name].append(run)
+        errors.update(pass_errors)
+        if canary:
+            run_canary(spark, samples)
+    ratios = [
+        _median(ts) / min(ts)
+        for ts in ([r["total"] for r in rs] for rs in runs.values())
+        if ts and min(ts) > 0
+    ]
+    noise = round(_median(ratios), 3) if ratios else 1.0
+    return runs, errors, samples, noise
+
+
+def select_queries(names: list[str]) -> dict:
+    """{name: spec} for ``names`` (all queries when empty); exits
+    non-zero listing any name that is not in the catalog."""
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
+    return {n: QUERIES[n] for n in dict.fromkeys(names or QUERIES)}
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    specs = select_queries(sys.argv[1:])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", CANARY_SF_DIR)
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = m.group(1) if m else os.path.basename(sf_dir.rstrip("/"))
+    budget = float(os.environ.get("SPARK_GRAFT_BUDGET_SEC", "4.0"))
+    canary = os.path.isdir(CANARY_SF_DIR)
     spark = get_spark(app_name="amdw-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm pass (untimed): run every query once so the timed pass measures
-    # steady-state plan execution, not whole-stage-codegen compilation and
-    # JIT warm-up. That is the number that scales to a long-running
-    # cluster job — codegen compiles once per plan shape, then executes
-    # for hours.
-    for spec in QUERIES.values():
-        spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # warm pass (untimed): the timed passes measure steady-state plan
+    # execution, not codegen compilation and JIT warm-up
+    _, errors = run_pass(spark, sf_dir, specs, "warm")
 
-    # three timed passes, min per query: single-shot numbers on a shared box
-    # carry ±10-15% scheduler/GC noise; the min is the stable steady-state.
-    # ALL pass times are recorded (bench_results.json "passes") so host
-    # noise and plan regressions are distinguishable from the artifact
-    # alone (round-4 verdict: a +30% min-drift on untouched queries was
-    # undecidable from min-of-3 without the spread).
-    # CLOSE PROTOCOL (see NOISE_GATE): a close over the noise gate
-    # re-runs once; the quieter close is the artifact.
     attempts: list[float] = []
     best = None
     for _ in range(MAX_CLOSE_ATTEMPTS):
-        result = _timed_passes(spark, sf_dir)
-        attempts.append(result[2])
-        if best is None or result[2] < best[2]:
+        result = timed_passes(spark, sf_dir, specs, canary)
+        errors.update(result[1])
+        attempts.append(result[3])
+        if best is None or result[3] < best[3]:
             best = result
-        if result[2] <= NOISE_GATE:
+        if result[3] <= NOISE_GATE:
             break
-    passes, canary_samples, noise_med_over_min, compiles = best
+    runs, _, canary_samples, noise_med_over_min = best
+    runs = {name: rs for name, rs in runs.items() if rs}
     close_info = {
         "noise_gate": NOISE_GATE,
         "attempts_noise": attempts,
@@ -214,59 +233,32 @@ def main() -> None:
         "accepted": noise_med_over_min <= NOISE_GATE,
     }
 
-    timings = {name: min(ts) for name, ts in passes.items()}
-    medians = {name: sorted(ts)[len(ts) // 2] for name, ts in passes.items()}
+    def per_pass(field):
+        return {name: [r[field] for r in rs] for name, rs in runs.items()}
 
+    passes = per_pass("total")
+    timings = {name: min(ts) for name, ts in passes.items()}
+    medians = {name: _median(ts) for name, ts in passes.items()}
     total = round(sum(timings.values()), 4)
-    # canary ratio: median over the 3 canary queries of
-    # (median-of-6-samples / pinned quiet-window baseline). Baselines are
-    # sf0.1-specific, so at any other sf the ratio is null and
-    # value_normalized is omitted from interpretation.
-    canary_medians = {
-        n: sorted(ts)[len(ts) // 2] for n, ts in canary_samples.items()
-    }
-    if sf == "0.1":
-        rs = sorted(
-            canary_medians[n] / CANARY_BASELINE_SEC[n] for n in CANARY_QUERIES
-        )
-        canary_ratio = round(rs[len(rs) // 2], 3)
-        value_normalized = round(total / canary_ratio, 4)
-    else:
-        canary_ratio = None
-        value_normalized = None
-    # Per-query time budget: one regressed query must fail LOUD instead of
-    # silently eating the catalog-total slack. The heaviest steady-state
-    # query at sf0.1 is dedup_clusters (5-gram Jaccard pair generation +
-    # iterative connected components): clean-run MIN-of-3 measured 2.2 to
-    # 2.8 s on this box depending on host load, with single-run spikes to
-    # 3.5 s. The regressions this gate exists to catch — a reintroduced
-    # shuffle, a lost broadcast, an eager driver loop — cost 2-10x, so
-    # 4.0 s (~1.6x the typical min) keeps full detection power while a
-    # noisy scheduler tick cannot fail a clean run. (r3's 2.5 s line left
-    # <1% headroom and measured the scheduler, not the plan.)
-    budget = float(os.environ.get("SPARK_GRAFT_BUDGET_SEC", "4.0"))
+    canary_medians = {n: _median(ts) for n, ts in canary_samples.items()}
+    ratio = canary_ratio(canary_samples)
+    value_normalized = round(total / ratio, 4) if ratio else None
     over = sorted(
         (name for name, t in timings.items() if t > budget),
         key=lambda n: -timings[n],
     )
-    # The driver records only the LAST ~2 KB of stdout and json-parses it;
-    # the full per-query map for this catalog is >2 KB on its own, which
-    # is exactly how BENCH_r03.json ended up with a truncated string blob
-    # and "parsed": null. So: full-fidelity per-query map goes to a
-    # committed file (round-over-round diffs read that), and stdout gets
-    # ONE short, always-parseable line whose "queries" field carries the
-    # top-10 slowest — the part of the map a regression check needs first.
     detail = {
         "metric": "catalog_total_runtime",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "passes": passes,
+        "build": per_pass("build"),
+        "exec": per_pass("exec"),
+        "build_jobs": per_pass("build_jobs"),
         "medians": medians,
-        # generated classes Janino compiled during each timed run (one
-        # entry per pass, aligned with "passes"): after the warm pass a
-        # non-zero count is codegen work repeated at steady state
-        "codegen_compiles": compiles,
+        "codegen_compiles": per_pass("compiles"),
+        "errors": errors,
         "noise_med_over_min": noise_med_over_min,
         "n_queries": len(timings),
         "mean_sec_per_query": round(total / max(len(timings), 1), 4),
@@ -278,18 +270,12 @@ def main() -> None:
             "queries": list(CANARY_QUERIES),
             "baseline_sec": CANARY_BASELINE_SEC,
             "baseline_provenance": (
-                "r18-build pins divided by the per-canary CODE speedup "
-                "of the r18 OPTIMIZATION pass, measured by a same-host-"
-                "window worktree A/B (open 104.73 s @ 1.359 vs HEAD "
-                "88.76 s @ 1.066) — the optimization sped the canaries "
-                "themselves, so the old pins no longer read host speed; "
-                "see CANARY_BASELINE_SEC for the derivation and the "
-                "chain of earlier epoch factors (r18-build ~ 1.042 x "
-                "r14; r14 <- r12 factor 1.095)"
+                "r18 optimization-pass pins at sf0.1; derivation and "
+                "earlier epoch factors in README 'bench.py'"
             ),
             "samples": canary_samples,
             "medians": canary_medians,
-            "ratio": canary_ratio,
+            "ratio": ratio,
             "value_normalized": value_normalized,
         },
     }
@@ -299,21 +285,6 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
         f.write("\n")
-    # Widen the stdout per-query map as far as the driver's stdout
-    # capture allows (r18 VERDICT #2: top-10-only coverage manufactured
-    # two phantom "dropped_from_bench" signals when queries merely left
-    # the top-10). The driver keeps only the LAST ~2000 bytes of stdout
-    # and json-parses them — BENCH_r03.json is the fossil of a full
-    # 72-query map overflowing that window ("parsed": null), and the
-    # 148-query map serializes to ~4.4 KB, so inlining ALL queries is
-    # impossible by construction. Instead: fill "queries" slowest-first
-    # until the whole line reaches LINE_BYTE_BUDGET (safely under 2000
-    # with headroom for field growth), typically ~45-55 entries —
-    # everything above ~0.5 s is visible round-over-round, and a
-    # "dropped" signal now requires falling below the mid-tail, not
-    # rank 11. The FULL map stays in bench_results.json (committed; the
-    # "queries_file" pointer below).
-    LINE_BYTE_BUDGET = 1800
     base = {
         "metric": "catalog_total_runtime",
         "value": total,
@@ -323,13 +294,14 @@ def main() -> None:
         "mean_sec_per_query": round(total / max(len(timings), 1), 4),
         "noise_med_over_min": noise_med_over_min,
         "close_accepted": close_info["accepted"],
-        "canary_ratio": canary_ratio,
+        "canary_ratio": ratio,
         "value_normalized": value_normalized,
         "budget_sec": budget,
         "over_budget": over,
         "sf": sf,
         "queries_file": "bench_results.json",
     }
+    # slowest first, as many as fit in LINE_BYTE_BUDGET
     slowest_first = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
     for k, v in slowest_first:
         base["queries"][k] = round(v, 3)
@@ -338,12 +310,18 @@ def main() -> None:
             break
     print(json.dumps(base, separators=(",", ":")))
     spark.stop()
+    failed = False
     if over:
         print(
             f"BUDGET EXCEEDED ({budget}s): "
             + ", ".join(f"{n}={timings[n]}s" for n in over),
             file=sys.stderr,
         )
+        failed = True
+    if errors:
+        print(f"QUERY ERRORS: {', '.join(sorted(errors))}", file=sys.stderr)
+        failed = True
+    if failed:
         sys.exit(1)
 
 

@@ -227,9 +227,7 @@ def catalog_mix_under_latency(spark, sf_dir: str, rtt: float) -> dict:
     metadata call routed through the latency wrapper. Returns per-query
     handler calls and walls; a query with a hidden O(files) or
     per-call metadata loop shows up as an outlier call count."""
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        clear_graph_memo,
-    )
+    from bench import run_pass
     from amsterdam_map_data_wrangling_spark.plans.queries import QUERIES
 
     handler = ReadLatencyHandler(rtt)
@@ -240,26 +238,33 @@ def catalog_mix_under_latency(spark, sf_dir: str, rtt: float) -> dict:
         _fs, p = real(path)
         return wrapped, p
 
-    clear_graph_memo()
-    per_query = {}
+    calls: dict[str, int] = {}
+
+    def counting_map(run, names):
+        for name in names:
+            before = handler.total_calls
+            out = run(name)
+            calls[name] = handler.total_calls - before
+            yield out
+
     fs_mod.pyarrow_fs_for = patched
     try:
-        for name in HOT_MIX:
-            before = handler.total_calls
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            QUERIES[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            per_query[name] = {
-                "wall_s": round(time.perf_counter() - t0, 3),
-                "metadata_calls": handler.total_calls - before,
-            }
+        runs, errors = run_pass(
+            spark,
+            sf_dir,
+            {n: QUERIES[n] for n in HOT_MIX},
+            f"rtt={rtt}",
+            counting_map,
+        )
     finally:
         fs_mod.pyarrow_fs_for = real
     return {
         "rtt_s": rtt,
-        "per_query": per_query,
+        "per_query": {
+            n: {"wall_s": round(r["total"], 3), "metadata_calls": calls[n]}
+            for n, r in runs.items()
+        },
+        "errors": errors,
         "total_metadata_calls": handler.total_calls,
         "calls_by_kind": dict(handler.calls),
     }

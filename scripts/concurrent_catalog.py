@@ -21,9 +21,15 @@ Reading the output:
 - ``top_inflation``: the queries whose K=max time grew most vs serial —
   the contention hot spots; shared-relation memo builders showing here
   would mean the per-key build locks (plans/dedup.py) aren't holding.
-- canary bracket before/after, same convention as sweep_catalog.py —
+- canary bracket before/after (bench.py's canary at its sf0.1 pins) —
   a probe artifact without a host-speed witness cannot be compared
   across rounds.
+- ``errors`` per worker count: queries that raised, by name.
+
+Each query runs through bench.py's ``run_query``, which clears Spark's
+cache first; under a thread pool that can also drop a hub another
+in-flight query persisted, which that query then recomputes (a cost,
+never a wrong value).
 """
 
 from __future__ import annotations
@@ -39,26 +45,14 @@ sys.path.insert(
 )
 
 import __spark_entry__  # noqa: E402,F401  (registers the full catalog)
-from bench import CANARY_BASELINE_SEC, _run_canary  # noqa: E402
-from amsterdam_map_data_wrangling_spark.plans.dedup import (  # noqa: E402
-    clear_graph_memo,
-)
+from bench import CANARY_SF_DIR, canary_ratio, run_canary, run_pass  # noqa: E402
 from amsterdam_map_data_wrangling_spark.plans.queries import QUERIES  # noqa: E402
 from amsterdam_map_data_wrangling_spark.session import get_spark  # noqa: E402
-
-WARM_DIR = "/root/testdata/sf0.1"
-
-
-def _canary_ratio(samples: dict[str, float]) -> float:
-    ratios = sorted(
-        samples[n] / CANARY_BASELINE_SEC[n] for n in CANARY_BASELINE_SEC
-    )
-    return round(ratios[len(ratios) // 2], 3)
 
 
 def main() -> None:
     argv = sys.argv[1:]
-    sf_dir = WARM_DIR
+    sf_dir = CANARY_SF_DIR
     out_path = None
     workers = [1, 4, 8]
     i = 0
@@ -77,34 +71,25 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     names = list(QUERIES)
 
-    def run_one(name: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.perf_counter() - t0, 4)
-
     # warm pass (codegen + JVM) — serial, untimed
-    print("warm pass...", file=sys.stderr, flush=True)
-    clear_graph_memo()
-    for n in names:
-        run_one(n)
+    run_pass(spark, sf_dir, QUERIES, "warm")
 
-    canary_before = _run_canary(spark, WARM_DIR)
+    canary_before = run_canary(spark)
     passes: dict[str, dict] = {}
     for k in workers:
-        clear_graph_memo()
-        spark.catalog.clearCache()
         t0 = time.perf_counter()
-        if k == 1:
-            per_q = {n: run_one(n) for n in names}
-        else:
-            with ThreadPoolExecutor(k) as ex:
-                per_q = dict(zip(names, ex.map(run_one, names)))
+        with ThreadPoolExecutor(k) as ex:
+            runs, errors = run_pass(
+                spark, sf_dir, QUERIES, f"workers={k}", ex.map
+            )
         wall = round(time.perf_counter() - t0, 2)
-        passes[str(k)] = {"wall_s": wall, "per_query": per_q}
+        passes[str(k)] = {
+            "wall_s": wall,
+            "per_query": {n: r["total"] for n, r in runs.items()},
+            "errors": errors,
+        }
         print(f"workers={k}: wall {wall}s", file=sys.stderr, flush=True)
-    canary_after = _run_canary(spark, WARM_DIR)
+    canary_after = run_canary(spark)
 
     serial = passes[str(workers[0])]["per_query"]
     kmax = str(workers[-1])
@@ -112,6 +97,7 @@ def main() -> None:
         (
             (round(passes[kmax]["per_query"][n] / max(serial[n], 1e-3), 2), n)
             for n in names
+            if n in serial and n in passes[kmax]["per_query"]
         ),
         reverse=True,
     )
@@ -128,8 +114,8 @@ def main() -> None:
             {"query": n, "x": x} for x, n in inflation[:12]
         ],
         "canary": {
-            "before": _canary_ratio(canary_before),
-            "after": _canary_ratio(canary_after),
+            "before": canary_ratio(canary_before),
+            "after": canary_ratio(canary_after),
         },
         "per_pass": passes,
     }

@@ -107,6 +107,36 @@ def test_memo_builds_once_under_contention(spark):
         f"consumers of one key"
     )
 
+    # and the shared TF-IDF cosine pair relation (plans/sparse)
+    from amsterdam_map_data_wrangling_spark.operators import sparse as ops
+    from amsterdam_map_data_wrangling_spark.plans import sparse
+
+    dedup.clear_graph_memo()
+    cosine_builds = []
+    orig_cosine = ops.sparse_cosine_pairs
+
+    def counting_cosine(*a, **kw):
+        with build_lock:
+            cosine_builds.append(1)
+        return orig_cosine(*a, **kw)
+
+    ops.sparse_cosine_pairs = counting_cosine
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            res = list(
+                ex.map(
+                    lambda _i: sparse.shared_sparse_pairs(spark, SF).count(),
+                    range(8),
+                )
+            )
+    finally:
+        ops.sparse_cosine_pairs = orig_cosine
+    assert len(set(res)) == 1
+    assert len(cosine_builds) == 1, (
+        f"cosine pair relation built {len(cosine_builds)}x by 8 "
+        f"concurrent consumers of one key"
+    )
+
 
 def test_memo_eviction_is_thread_safe():
     """r16 ADVICE: _memo_put's FIFO eviction was check-then-act — at
