@@ -7,10 +7,11 @@ xxhash64 paths, whose raw codes have no DuckDB twin; since round 4 they are
 hash-gated anyway via engine-portable INVARIANTS (every exact-duplicate
 pair/group — portable md5 fingerprint — must be recalled / share one code
 in ANY hash family, asserted TRUE by the oracle). Their value algebra is
-additionally gated through ``dedup_minhash_portable`` /
-``dedup_minhash_portable_pairs`` / ``dedup_simhash_portable`` (same
-signature algebra, md5-derived family), and their pair *semantics* are
-pytest-verified against the exact-Jaccard query (tests/test_dedup.py).
+additionally gated through ``dedup_minhash_portable_pairs`` and the
+retired ``dedup_simhash_portable`` (same signature algebra, md5-derived
+family; the latter compared in tests/test_retired.py), and their pair
+*semantics* are pytest-verified against the exact-Jaccard query
+(tests/test_dedup.py).
 No query in this module is rows-only at the driver gate.
 """
 
@@ -203,8 +204,6 @@ SHARED_PAIRS_CONSUMER_THRESHOLDS: dict[str, float] = {
     "dedup_clusters": 0.5,  # via shared_jaccard_components
     "dedup_keep_canonical": 0.5,  # via shared_jaccard_components
     "leakage_free_split": 0.5,  # components + the leak-audit pair read
-    "cluster_hist (r08_queue)": 0.5,  # via shared_jaccard_components
-    "degree_hist (r08_queue)": 0.5,
     "near_dup_transitivity": 0.3,
     "near_dup_pagerank": 0.3,
 }
@@ -547,53 +546,6 @@ def dedup_keep_canonical(spark, sf_dir):
     )
 
 
-#: dedup_minhash_portable — RETIRED from the gate registry at round 18
-#: (the N-saturation policy's retirement mechanism; slot freed for the
-#: r18 front's five entrants: the three probe-affected r16-cohort
-#: levers + the two new operator gates). Lowest marginal evidence in
-#: the minhash family: its signature relation is a strict
-#: SUB-COMPUTATION of the still-gated dedup_minhash_portable_pairs
-#: (r17 green), which builds the identical md5 universal-hash
-#: signatures and then value-gates the banding join and pair expansion
-#: on top. The full oracle compare lives on in tests/test_retired.py.
-MINHASH_PORTABLE_ORACLE = r"""
-    WITH toks AS (
-      SELECT doc_id AS id, string_split_regex(trim(text), '\s+') AS l
-      FROM documents WHERE doc_id % 10 = 0
-    ), sh AS (
-      SELECT DISTINCT id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-      FROM toks, unnest(range(1, len(l) - 1)) AS r(i)
-      WHERE len(l) >= 3
-    ), hashed AS (
-      SELECT id,
-             ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS h
-      FROM sh
-    )
-    SELECT id AS doc_id,
-           min((7    * h + 3)   % 2147483647) AS h0,
-           min((13   * h + 5)   % 2147483647) AS h1,
-           min((31   * h + 11)  % 2147483647) AS h2,
-           min((67   * h + 17)  % 2147483647) AS h3,
-           min((127  * h + 23)  % 2147483647) AS h4,
-           min((257  * h + 41)  % 2147483647) AS h5,
-           min((521  * h + 83)  % 2147483647) AS h6,
-           min((1031 * h + 163) % 2147483647) AS h7
-    FROM hashed GROUP BY id
-    """
-
-
-def dedup_minhash_portable(spark, sf_dir):
-    from amsterdam_map_data_wrangling_spark.operators.dedup import (
-        minhash_signatures_portable,
-        shingles,
-    )
-
-    (documents,) = _t(spark, sf_dir, "documents")
-    subset = documents.filter(F.col("doc_id") % 10 == 0)
-    sig = minhash_signatures_portable(shingles(subset, "doc_id", "text", 3), 8)
-    return sig.withColumnRenamed("id", "doc_id")
-
-
 def _minhash_pairs_portable_sql(k: int = 8, bands: int = 4) -> str:
     """DuckDB twin of the FULL portable MinHash→LSH path: md5 universal-hash
     signatures, md5 band hashes, bucket self-join, per-pair signature
@@ -713,7 +665,7 @@ def dedup_minhash_portable_pairs(spark, sf_dir):
 
 
 #: dedup_simhash_portable — RETIRED from the gate registry at round 18
-#: (same retirement batch as dedup_minhash_portable above). Nearest
+#: (saturation-policy retirement batch). Nearest
 #: twin: the still-gated dedup_simhash_bands (r17 green) shares the
 #: SimHash construction (token hash → per-bit votes → sign-threshold
 #: code) and value-gates its banding behavior; this query's only

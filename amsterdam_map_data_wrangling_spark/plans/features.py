@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from amsterdam_map_data_wrangling_spark.operators.features import (
-    hash_rank_sample_per_group,
     robust_zscores,
     unigram_logprob_scores,
     weighted_sample_per_group,
@@ -185,36 +184,6 @@ def unigram_lm_scores(spark, sf_dir):
         "n_tokens",
         F.round("mean_logprob", 6).alias("mean_lp_r"),
     )
-
-
-#: uniform_sample_per_group — RETIRED from the gate registry at round 11
-#: (the N=150 saturation policy's retirement mechanism) to free a front
-#: slot for dup_span_removal (plans/text.py). Lowest marginal evidence
-#: in the sampler family: it is the weight==const special case of the
-#: still-gated weighted_sample_per_group (same portable hash-rank
-#: machinery, same window plan), with systematic and rate-based
-#: sampling independently gated (stratified_sample_counts,
-#: mixture_proportional_sample, dataset_split_stats). The full oracle
-#: compare lives on in tests/test_retired.py.
-UNIFORM_SAMPLE_ORACLE = """
-    WITH ranked AS (
-      SELECT source, doc_id,
-             row_number() OVER (
-               PARTITION BY source
-               ORDER BY ('0x' || substr(md5('samp|spark-graft|'
-                 || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT, doc_id
-             ) AS rnk
-      FROM documents
-    )
-    SELECT source, doc_id FROM ranked WHERE rnk <= 5
-    """
-
-
-def uniform_sample_per_group(spark, sf_dir):
-    (documents,) = _t(spark, sf_dir, "documents")
-    return hash_rank_sample_per_group(
-        documents, "source", "doc_id", k=5
-    ).select("source", "doc_id")
 
 
 @query(

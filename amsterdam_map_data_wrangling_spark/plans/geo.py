@@ -19,10 +19,9 @@ touched cells); hot-city skew is the documented salting/AQE-skew case.
 
 Coordinates are deterministic md5-derived points in an Amsterdam-sized
 bbox (lat 52.28..52.43, lon 4.73..5.03 — no geometry in the star
-schema; the portable derivation lets DuckDB replay them exactly, the
-same trick as spatial_radius_pairs). The haversine formula is written
-with the IDENTICAL operation order on both engines and distances are
-rounded to cm, far above cross-libm ulp noise.
+schema; the portable derivation lets DuckDB replay them exactly). The
+haversine formula is written with the IDENTICAL operation order on both
+engines and distances are rounded to cm, far above cross-libm ulp noise.
 
 Cell-size exhaustiveness (3x3 covers the radius): one y-unit is
 0.15 deg / 1e5 ~= 0.1668 m and one x-unit is 0.30 deg * cos(lat) /
@@ -68,8 +67,8 @@ _PTS_CTE = """
 
 
 def _coord(tag: str, key: Column) -> Column:
-    """Portable md5-derived integer coordinate in [0, 100000) — the
-    spatial_radius_pairs derivation, hash-identical in DuckDB."""
+    """Portable md5-derived integer coordinate in [0, 100000),
+    hash-identical in DuckDB."""
     return (
         F.conv(
             F.substring(

@@ -201,23 +201,6 @@ def like_filter_count(spark, sf_dir):
     return part.filter(F.col("p_name").like("%re%")).agg(F.count("*").alias("cnt"))
 
 
-#: RETIRED from the registry at round 8 (the saturation policy's
-#: retirement mechanism, exercised for the warc_roundtrip_stats slot):
-#: of the 150 gated queries this was the lowest-marginal-evidence one —
-#: a one-flag variant of like_filter_count whose distinct semantics
-#: (SQLite's case-insensitive LIKE, SURVEY §2.4, expressed as
-#: Column.ilike so the predicate stays pushdown-recognizable; lower(col)
-#: LIKE would disable parquet min/max + dictionary pushdown) remain
-#: verified by the DuckDB compare in tests/test_retired.py and the OSM
-#: workload's name_ilike_count pytest. Gate history: hash-green r01-r06.
-ILIKE_FILTER_ORACLE = "SELECT COUNT(*) AS cnt FROM part WHERE p_name ILIKE '%RE%'"
-
-
-def ilike_filter_count(spark, sf_dir):
-    (part,) = _t(spark, sf_dir, "part")
-    return part.filter(F.col("p_name").ilike("%RE%")).agg(F.count("*").alias("cnt"))
-
-
 @query(
     "scan_filter_project",
     """

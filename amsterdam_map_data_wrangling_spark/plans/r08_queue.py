@@ -1,26 +1,22 @@
-r"""Round-8 registration queue: 24 (build, oracle) pairs VALIDATED in
-round 7 but deliberately NOT registered — round 7 closed with the gate
-window exactly at its capacity-math balance, and these 24 are sized as
-an EXACT FILL of the r08 front next to the 26-name r05-green park
-(26 + 24 = 50; saturation analysis at plans/catalog.py:_GATE_PRIORITY —
-registering all 24 caps the catalog at N = 150 in a permanent 3-round
-re-gate cycle). This module is not imported by catalog._load_all;
-tests/test_r08_queue.py keeps every pair hash-green against DuckDB at
-both SFs (plus a plan-invariant scan with the BNLJ_OK 1-row-stitch
-whitelist) so round 8 can register by adding @query decorators +
-rotation entries + BNLJ_WHITELIST entries + an ORACLE_HASHES.json "8"
-snapshot only.
+"""Event, order, embedding and corpus analytics: 21 catalog queries
+(splits, cohorts, drift and independence tests, binning, association
+rules, concentration, A/B z-scores, data-quality audits, the MinHash
+recall curve), each registered with ``@query`` on its builder.
 
 Float-gate conventions as the registered catalog (plans/catalog.py
-module docstring); the exactness DESIGN choices specific to this queue
-(Spearman-over-Pearson, Simpson-over-Shannon, integer-KS, per-cell
-chi2, corpus-relative A/B cut, bin-length log2) are tabulated in
-PLANS.md "r08 queue — design choices".
+module docstring); the exactness DESIGN choices specific to these
+queries (Spearman-over-Pearson, Simpson-over-Shannon, integer-KS,
+per-cell chi2, corpus-relative A/B cut, bin-length log2) are tabulated
+in PLANS.md "r08 queue — design choices". The module name is what
+perfbench's per-family metrics (``plans.r08_queue.*``) attribute time
+to.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
+
+from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
 
 #: deterministic 80/10/10 split on the portable hash — the dataset-split
 #: stage every training pipeline runs; retry-stable like the samplers.
@@ -41,14 +37,13 @@ SPLIT_ORACLE = """
 """
 
 
+@query("dataset_split_stats", SPLIT_ORACLE)
 def split_build(spark, sf_dir):
     """Deterministic hash train/val/test split, counted per source: the
     portable md5 bucket means the SAME document lands in the same split
     on any engine, any retry, any cluster size — the reproducibility
     property random splits lack. Scale: a narrow map + one (source,
     split) aggregation; no data movement beyond the count shuffle."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (documents,) = _t(spark, sf_dir, "documents")
     bucket = (
         F.conv(
@@ -83,7 +78,8 @@ def split_build(spark, sf_dir):
 #: components quantize (floor(x*1000 + 0.5) — the similarity family's
 #: portable anchor), per-(label, dim) integer sums are exact, and the
 #: single division per output value is correctly-rounded IEEE → both
-#: engines emit identical doubles (rounded to 6 anyway).
+#: engines emit identical doubles, rounded to 6 the same way (see the
+#: build's final projection).
 CENTROID_ORACLE = """
     WITH e AS (
       SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -100,6 +96,7 @@ CENTROID_ORACLE = """
 """
 
 
+@query("embedding_label_centroids", CENTROID_ORACLE)
 def centroid_build(spark, sf_dir):
     """Per-label embedding centroids in long (label, dim) form — the
     class-prototype builder (nearest-centroid classification, cluster
@@ -107,8 +104,6 @@ def centroid_build(spark, sf_dir):
     sum so the aggregation is accumulation-order-free; one division at
     the end. Scale: posexplode is a narrow map; one (label, dim)
     aggregation — 64·|labels| output rows regardless of corpus size."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     comp = embeddings.select(
         "label",
@@ -126,16 +121,15 @@ def centroid_build(spark, sf_dir):
         "label",
         F.col("i").cast("bigint").alias("dim"),
         F.col("n").cast("bigint").alias("n"),
-        F.round(
-            F.col("sq").cast("double") / F.col("n") / 1000.0, 6
+        # DuckDB's round(x, 6) is round(x * 1e6) / 1e6 on the binary
+        # value; Spark's round(x, 6) rounds x's decimal string, which
+        # rounds a half-way mean like 3057/48/1000 = 0.0636875 the other
+        # way. Scaling first makes both engines round the same double.
+        (
+            F.round(F.col("sq").cast("double") / F.col("n") / 1000.0 * 1e6, 0)
+            / 1e6
         ).alias("mean_r"),
     )
-
-
-QUEUE = {
-    "dataset_split_stats": (split_build, SPLIT_ORACLE),
-    "embedding_label_centroids": (centroid_build, CENTROID_ORACLE),
-}
 
 
 def _recall_curve_oracle() -> str:
@@ -225,6 +219,7 @@ def _recall_curve_oracle() -> str:
 """
 
 
+@query("minhash_recall_curve", _recall_curve_oracle())
 def recall_curve_build(spark, sf_dir):
     """LSH recall curve: exact w=3 Jaccard pairs vs the portable
     MinHash banding candidates on the same corpus, rolled up per
@@ -237,8 +232,6 @@ def recall_curve_build(spark, sf_dir):
         ngram_jaccard_pairs,
         shingles,
     )
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (documents,) = _t(spark, sf_dir, "documents")
     subset = documents.filter(F.col("doc_id") % 20 == 0)
     corpus = subset.unionByName(
@@ -270,129 +263,6 @@ def recall_curve_build(spark, sf_dir):
     )
 
 
-QUEUE["minhash_recall_curve"] = (recall_curve_build, _recall_curve_oracle())
-
-
-#: cluster-SIZE distribution of the near-dup graph — the dedup QA
-#: rollup on top of connected components ("how big do duplicate groups
-#: get" decides salting/keep policies before a 100 TB run); singleton
-#: documents (no near-dup edge) are counted explicitly so the histogram
-#: covers the whole corpus, not just the edge-touched minority.
-#: shared candidate-pair CTE (df-capped 5-gram shingle blocking +
-#: exact Jaccard >= 0.5) — the oracle twin of
-#: operators.dedup.ngram_jaccard_pairs, reused by every graph-rollup
-#: gate in this queue.
-_NGRAM_PAIRS_CTE = (
-    "WITH RECURSIVE toks AS ("
-    r"""
-      SELECT doc_id AS id, string_split_regex(trim(text), '\s+') AS l
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT id,
-             l[i] || ' ' || l[i+1] || ' ' || l[i+2] || ' ' || l[i+3]
-                  || ' ' || l[i+4] AS shingle
-      FROM toks, unnest(range(1, len(l) - 3)) AS r(i)
-      WHERE len(l) >= 5
-    ), rare AS (
-      SELECT id, shingle FROM sh
-      WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle
-                        HAVING COUNT(*) <= 50)
-    ), sizes AS (SELECT id, COUNT(*) AS n_sh FROM rare GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS n_inter
-      FROM rare a JOIN rare b ON a.shingle = b.shingle AND a.id < b.id
-      GROUP BY a.id, b.id
-    ), pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
-      WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
-    )"""
-)
-
-
-CLUSTER_HIST_ORACLE = (
-    _NGRAM_PAIRS_CTE
-    + """, edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs
-    ), walk(id, label) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.id
-    ), comp AS (
-      SELECT id, min(label) AS cluster_id FROM walk GROUP BY id
-    ), csz AS (
-      SELECT cluster_id, COUNT(*) AS sz FROM comp GROUP BY cluster_id
-    ), hist AS (
-      SELECT sz, COUNT(*) AS n_clusters FROM csz GROUP BY sz
-      UNION ALL
-      SELECT 1 AS sz,
-             (SELECT COUNT(*) FROM documents)
-               - (SELECT COUNT(*) FROM comp) AS n_clusters
-    )
-    SELECT CAST(sz AS BIGINT) AS cluster_size,
-           CAST(SUM(n_clusters) AS BIGINT) AS n_clusters
-    FROM hist GROUP BY sz
-"""
-)
-
-
-def cluster_hist_build(spark, sf_dir):
-    """Cluster-size histogram over the near-dup components, singletons
-    included: composes connected_components with two rollups — the
-    report that sizes the keep-canonical stage. Scale: both rollups run
-    on the component relation (|edge-touched docs| rows); the singleton
-    count is corpus_count − component_count, two scalars."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        shared_jaccard_components,
-    )
-
-    (documents,) = _t(spark, sf_dir, "documents")
-    # the component relation is the session-shared one (see
-    # plans/dedup.py:_GRAPH_MEMO) — already checkpoint-backed, and the
-    # same labels dedup_clusters / dedup_keep_canonical read
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        SHARED_PAIRS_CONSUMER_THRESHOLDS,
-    )
-
-    comp = shared_jaccard_components(
-        spark,
-        sf_dir,
-        w=5,
-        threshold=SHARED_PAIRS_CONSUMER_THRESHOLDS["cluster_hist (r08_queue)"],
-        df_cap=50,
-    )
-    csz = comp.groupBy("cluster_id").agg(F.count("*").alias("sz"))
-    hist = csz.groupBy("sz").agg(F.count("*").alias("n_clusters"))
-    singles = (
-        documents.agg(F.count("*").alias("n_docs"))
-        .crossJoin(comp.agg(F.count("*").alias("n_comp")))
-        .select(
-            F.lit(1).cast("bigint").alias("sz"),
-            (F.col("n_docs") - F.col("n_comp")).alias("n_clusters"),
-        )
-    )
-    return (
-        hist.unionByName(singles)
-        .groupBy("sz")
-        .agg(F.sum("n_clusters").cast("bigint").alias("n_clusters"))
-        .select(
-            F.col("sz").cast("bigint").alias("cluster_size"), "n_clusters"
-        )
-    )
-
-
-# dedup_cluster_size_hist — RETIRED from the gate registry at round 18
-# (saturation-policy retirement batch). Lowest marginal evidence in
-# the dedup-graph family: a two-rollup histogram over the SAME
-# session-shared component relation the still-gated dedup_clusters /
-# dedup_keep_canonical / near_dup_pagerank value-gate (r17 green) —
-# the component labels it aggregates are hash-verified there. Full
-# oracle compare lives on in tests/test_retired.py.
-CLUSTER_HIST_RETIRED = (cluster_hist_build, CLUSTER_HIST_ORACLE)
-
-
 #: first-order event-transition counts — the Markov-chain feature
 #: builder for behavioral sequences (and the input to transition-matrix
 #: anomaly checks); within-user ordering pinned by the catalog's total
@@ -410,15 +280,12 @@ TRANSITION_ORACLE = """
 """
 
 
+@query("event_transition_counts", TRANSITION_ORACLE)
 def transition_build(spark, sf_dir):
     """First-order transition counts between consecutive events per
     user: one lag() window over the (ts, event_id) total order, one
     (prev, next) aggregation. Scale: one user-key shuffle for the
     window; the output is |event_types|² rows regardless of data."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
@@ -431,9 +298,6 @@ def transition_build(spark, sf_dir):
         .groupBy("prev", "next")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-
-
-QUEUE["event_transition_counts"] = (transition_build, TRANSITION_ORACLE)
 
 
 #: SCD2 (slowly-changing-dimension, type 2) build from the event log:
@@ -459,6 +323,7 @@ SCD2_ORACLE = """
 """
 
 
+@query("scd2_state_durations", SCD2_ORACLE)
 def scd2_build(spark, sf_dir):
     """SCD2 dimension build: each event opens a per-user state interval,
     closed by the user's next event (valid_to = lead(ts)); open
@@ -466,10 +331,6 @@ def scd2_build(spark, sf_dir):
     count, open count, total dwell time. Scale: ONE user_id shuffle for
     the lead() window, then a per-state partial agg — the standard
     change-capture → dimension shape, no state store needed in batch."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
@@ -494,9 +355,6 @@ def scd2_build(spark, sf_dir):
     )
 
 
-QUEUE["scd2_state_durations"] = (scd2_build, SCD2_ORACLE)
-
-
 #: weekly cohort-retention matrix — cohort = the user's first active
 #: week (Monday-truncated, both engines); cell = distinct users of that
 #: cohort active N weeks later. Pure integer arithmetic: week deltas
@@ -518,6 +376,7 @@ COHORT_ORACLE = """
 """
 
 
+@query("cohort_retention", COHORT_ORACLE)
 def cohort_build(spark, sf_dir):
     """Daily cohort-retention matrix: users bucketed by first-active
     day; each cell counts the cohort's distinct users active N days on.
@@ -526,8 +385,6 @@ def cohort_build(spark, sf_dir):
     assignment, one equi-join back (AQE broadcasts the |users|-row side
     when small, shuffles when not), one DISTINCT — output is |cohort
     days| x |day offsets|, constant in corpus size."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     day = F.col("ts").cast("date")
     firsts = events.groupBy("user_id").agg(F.min(day).alias("cohort_day"))
@@ -550,9 +407,6 @@ def cohort_build(spark, sf_dir):
         "days_since",
         "n_users",
     )
-
-
-QUEUE["cohort_retention"] = (cohort_build, COHORT_ORACLE)
 
 
 #: Kolmogorov–Smirnov drift statistic between the hash-split train and
@@ -592,6 +446,7 @@ KS_ORACLE = """
 """
 
 
+@query("ks_split_drift", KS_ORACLE)
 def ks_build(spark, sf_dir):
     """Exact two-sample KS statistic between the deterministic train
     split and its holdout, on the n_chars distribution. ECDFs only step
@@ -601,10 +456,6 @@ def ks_build(spark, sf_dir):
     relation (bounded domain, not corpus rows) — the single-partition
     window is over |distinct n_chars| rows only; everything upstream is
     one narrow map + one value agg."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (documents,) = _t(spark, sf_dir, "documents")
     bucket = (
         F.conv(
@@ -672,9 +523,6 @@ def ks_build(spark, sf_dir):
     )
 
 
-QUEUE["ks_split_drift"] = (ks_build, KS_ORACLE)
-
-
 #: chi-square independence audit of event_type x ISO weekday — per-cell
 #: observed/expected/contribution. Every input to the float math is an
 #: exact integer, and the float path is exclusively IEEE basic ops
@@ -707,6 +555,7 @@ CHI2_ORACLE = """
 """
 
 
+@query("chi2_type_weekday", CHI2_ORACLE)
 def chi2_build(spark, sf_dir):
     """Chi-square independence audit (event_type x weekday): per-cell
     observed count, expected count under independence, and the cell's
@@ -716,8 +565,6 @@ def chi2_build(spark, sf_dir):
     pass builds all four margins (cells, rows, cols, total are
     aggregations of the same narrow projection); the joins stitch
     |types| x 7 rows — broadcast territory by construction."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     base = events.select(
         "event_type", F.weekday(F.col("ts").cast("date")).alias("wd")
@@ -740,9 +587,6 @@ def chi2_build(spark, sf_dir):
             F.round((d * d) / e, 6).alias("chi2_term_r"),
         )
     )
-
-
-QUEUE["chi2_type_weekday"] = (chi2_build, CHI2_ORACLE)
 
 
 #: pairwise vocabulary Jaccard between sources — corpus-mix comparison
@@ -774,6 +618,7 @@ VOCAB_JACCARD_ORACLE = r"""
 """
 
 
+@query("vocab_jaccard_sources", VOCAB_JACCARD_ORACLE)
 def vocab_jaccard_build(spark, sf_dir):
     """Pairwise vocabulary overlap (exact Jaccard on distinct-token
     sets) between sources — the corpus-mix diff for dataset curation
@@ -784,7 +629,6 @@ def vocab_jaccard_build(spark, sf_dir):
     document text. Pairs with zero shared vocabulary drop out (inner
     join) on both engines."""
     from amsterdam_map_data_wrangling_spark.functions.text import tokens
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
 
     (documents,) = _t(spark, sf_dir, "documents")
     toks = (
@@ -834,9 +678,6 @@ def vocab_jaccard_build(spark, sf_dir):
     )
 
 
-QUEUE["vocab_jaccard_sources"] = (vocab_jaccard_build, VOCAB_JACCARD_ORACLE)
-
-
 #: equal-frequency (decile) binning of event values per type — the
 #: feature-quantization staple. ntile() is identical standard SQL on
 #: both engines; bin min/max are raw stored doubles (NO arithmetic), so
@@ -856,6 +697,7 @@ DECILE_ORACLE = """
 """
 
 
+@query("equal_freq_deciles", DECILE_ORACLE)
 def decile_build(spark, sf_dir):
     """Equal-frequency decile binning per event_type (feature
     quantization): ntile(10) over the (value, event_id) total order,
@@ -864,10 +706,6 @@ def decile_build(spark, sf_dir):
     event_type shuffle shared by the window and the aggregation;
     at 100 TB swap ntile for approx-percentile cut points (the sketch
     family) — this exact form is the small-dim / per-group path."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     binned = events.select(
@@ -884,9 +722,6 @@ def decile_build(spark, sf_dir):
         "lo",
         "hi",
     )
-
-
-QUEUE["equal_freq_deciles"] = (decile_build, DECILE_ORACLE)
 
 
 #: lag-1 SPEARMAN autocorrelation of daily order revenue — rank form
@@ -923,6 +758,7 @@ SPEARMAN_ORACLE = """
 """
 
 
+@query("spearman_autocorr_daily_revenue", SPEARMAN_ORACLE)
 def spearman_build(spark, sf_dir):
     """Lag-1 Spearman autocorrelation of the daily revenue series —
     'does a strong day predict the next?' in rank space. Rank form is
@@ -932,10 +768,6 @@ def spearman_build(spark, sf_dir):
     Scale: the day aggregation is the only data-sized shuffle; the
     lead/rank windows run on the |days|-row relation (bounded domain,
     single partition by construction)."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (orders,) = _t(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
@@ -978,9 +810,6 @@ def spearman_build(spark, sf_dir):
     )
 
 
-QUEUE["spearman_autocorr_daily_revenue"] = (spearman_build, SPEARMAN_ORACLE)
-
-
 #: min-max feature scaling audit — per event_type quartile-bin counts of
 #: the scaled value. The scaled value is (v - min)/(max - min): IEEE
 #: sub/sub/div on identical stored doubles → bit-identical on both
@@ -1004,6 +833,7 @@ MINMAX_ORACLE = """
 """
 
 
+@query("minmax_scale_bins", MINMAX_ORACLE)
 def minmax_build(spark, sf_dir):
     """Min-max scaling audit per event_type: scale value to [0,1] with
     the group's own min/max (broadcast back), count rows per quartile of
@@ -1013,8 +843,6 @@ def minmax_build(spark, sf_dir):
     Degenerate groups (mx = mn) pin to bin 0 instead of dividing by
     zero. Scale: one tiny per-group stats agg broadcast back onto a
     narrow map — the value column shuffles once for the final count."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     stats = events.groupBy("event_type").agg(
         F.min("value").alias("mn"), F.max("value").alias("mx")
@@ -1047,9 +875,6 @@ def minmax_build(spark, sf_dir):
     )
 
 
-QUEUE["minmax_scale_bins"] = (minmax_build, MINMAX_ORACLE)
-
-
 #: per-source token-diversity profile. Simpson concentration (sum c^2 /
 #: N^2) is chosen over Shannon entropy DELIBERATELY: it is a pure
 #: exact-integer statistic (no ln(), whose last-ulp libm differences the
@@ -1075,6 +900,7 @@ DIVERSITY_ORACLE = r"""
 """
 
 
+@query("token_diversity_by_source", DIVERSITY_ORACLE)
 def diversity_build(spark, sf_dir):
     """Token-diversity profile per source: token count, vocabulary
     size, type-token ratio, and Simpson concentration (the probability
@@ -1085,7 +911,6 @@ def diversity_build(spark, sf_dir):
     stopword would need decimal widening, which the docstring flags
     rather than hides."""
     from amsterdam_map_data_wrangling_spark.functions.text import tokens
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
 
     (documents,) = _t(spark, sf_dir, "documents")
     tc = (
@@ -1113,9 +938,6 @@ def diversity_build(spark, sf_dir):
             6,
         ).alias("simpson_concentration"),
     )
-
-
-QUEUE["token_diversity_by_source"] = (diversity_build, DIVERSITY_ORACLE)
 
 
 #: nearest-centroid (Rocchio) confusion matrix — label vs predicted
@@ -1167,6 +989,7 @@ CONFUSION_ORACLE = """
 """
 
 
+@query("nearest_centroid_confusion", CONFUSION_ORACLE)
 def confusion_build(spark, sf_dir):
     """Confusion matrix of nearest-centroid classification against the
     given labels — class-separation / label-noise audit for the
@@ -1179,8 +1002,6 @@ def confusion_build(spark, sf_dir):
     from amsterdam_map_data_wrangling_spark.operators.similarity import (
         nearest_centroid_classify,
     )
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     labeled = nearest_centroid_classify(
         embeddings, "vec_id", "embedding", "label"
@@ -1188,9 +1009,6 @@ def confusion_build(spark, sf_dir):
     return labeled.groupBy(
         F.col("label").alias("true_label"), "pred_label"
     ).agg(F.count("*").cast("bigint").alias("n"))
-
-
-QUEUE["nearest_centroid_confusion"] = (confusion_build, CONFUSION_ORACLE)
 
 
 #: RFM customer segmentation on the orders table — recency in exact
@@ -1225,6 +1043,7 @@ RFM_ORACLE = """
 """
 
 
+@query("rfm_segment_counts", RFM_ORACLE)
 def rfm_build(spark, sf_dir):
     """RFM (recency/frequency/monetary) segmentation: per-customer
     exact-integer metrics (days since last order vs the global max
@@ -1234,10 +1053,6 @@ def rfm_build(spark, sf_dir):
     Scale: one custkey aggregation; the three ntile windows run on the
     |customers| relation — at 100 TB swap ntile for approx-percentile
     cut points, same downstream segment rollup."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (orders,) = _t(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_day"),
@@ -1272,9 +1087,6 @@ def rfm_build(spark, sf_dir):
         F.col("m_q").cast("bigint").alias("m_q"),
         "n_customers",
     )
-
-
-QUEUE["rfm_segment_counts"] = (rfm_build, RFM_ORACLE)
 
 
 #: referential-integrity + validity audit of the star schema — one row
@@ -1314,6 +1126,7 @@ DQ_ORACLE = """
 """
 
 
+@query("dq_audit_star", DQ_ORACLE)
 def dq_build(spark, sf_dir):
     """Data-quality audit suite over the star schema: referential
     integrity (orphan lineitems, childless orders, orderless customers
@@ -1323,8 +1136,6 @@ def dq_build(spark, sf_dir):
     broadcasts the smaller side); the validity scans are
     filter-pushdown counts; checks are independent jobs a scheduler
     can run in parallel."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     lineitem, orders, customer = _t(
         spark, sf_dir, "lineitem", "orders", "customer"
     )
@@ -1359,216 +1170,6 @@ def dq_build(spark, sf_dir):
         .unionByName(one("ship_before_order", ship_bad))
         .unionByName(one("discount_out_of_range", disc_bad))
     )
-
-
-QUEUE["dq_audit_star"] = (dq_build, DQ_ORACLE)
-
-
-#: degree distribution of the near-dup similarity graph — the skew
-#: report for pair-generating stages (a power-law tail says salt the
-#: bucket join before scaling up). Edge-touched nodes only (degree >= 1),
-#: documented on both engines.
-DEGREE_ORACLE = (
-    _NGRAM_PAIRS_CTE
-    + """, edges AS (
-      SELECT id_a AS src FROM pairs
-      UNION ALL SELECT id_b AS src FROM pairs
-    ), deg AS (
-      SELECT src, COUNT(*) AS degree FROM edges GROUP BY src
-    )
-    SELECT CAST(degree AS BIGINT) AS degree,
-           CAST(COUNT(*) AS BIGINT) AS n_nodes
-    FROM deg GROUP BY degree
-"""
-)
-
-
-def degree_hist_build(spark, sf_dir):
-    """Degree histogram of the near-dup pair graph: how many documents
-    participate in how many near-dup relations — the skew audit that
-    decides whether the downstream component/keep stages need salting.
-    Scale: degrees aggregate the PAIR relation (already df-capped and
-    never quadratic), two tiny rollups; the corpus text never moves."""
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        shared_jaccard_pairs,
-    )
-
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        SHARED_PAIRS_CONSUMER_THRESHOLDS,
-    )
-
-    pairs = shared_jaccard_pairs(
-        spark,
-        sf_dir,
-        w=5,
-        threshold=SHARED_PAIRS_CONSUMER_THRESHOLDS["degree_hist (r08_queue)"],
-        df_cap=50,
-    )
-    edges = pairs.select(F.col("id_a").alias("src")).unionByName(
-        pairs.select(F.col("id_b").alias("src"))
-    )
-    deg = edges.groupBy("src").agg(F.count("*").alias("degree"))
-    return deg.groupBy("degree").agg(
-        F.count("*").cast("bigint").alias("n_nodes")
-    ).select(F.col("degree").cast("bigint").alias("degree"), "n_nodes")
-
-
-# neardup_degree_hist — RETIRED from the gate registry at round 18
-# (same batch as dedup_cluster_size_hist above). A two-rollup degree
-# histogram over the SAME df-capped pair relation the still-gated
-# near_dup_transitivity / near_dup_pagerank value-gate (r17 green).
-# Full oracle compare lives on in tests/test_retired.py.
-DEGREE_HIST_RETIRED = (degree_hist_build, DEGREE_ORACLE)
-
-
-#: grid-bucketed spatial radius join — the distributed spatial-join
-#: shape (geohash/grid cell as the shuffle key, 3x3 neighborhood
-#: candidate join, exact refine). Coordinates are DETERMINISTIC
-#: synthetic integers from the portable md5 (the star schema carries no
-#: geometry; the harness pins the operator's arithmetic end-to-end),
-#: so every distance is an exact BIGINT and the gate is float-free.
-SPATIAL_ORACLE = """
-    WITH pts AS (
-      SELECT doc_id AS id,
-             ('0x' || substr(md5('geo-x|spark-graft|'
-               || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 100000 AS x,
-             ('0x' || substr(md5('geo-y|spark-graft|'
-               || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 100000 AS y
-      FROM documents
-    ), cells AS (
-      SELECT id, x, y, x // 2000 AS cx, y // 2000 AS cy FROM pts
-    ), cand AS (
-      SELECT a.id AS id_a, b.id AS id_b,
-             (a.x - b.x) * (a.x - b.x)
-               + (a.y - b.y) * (a.y - b.y) AS dist2
-      FROM cells a
-      JOIN cells b
-        ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
-       AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
-       AND a.id < b.id
-    )
-    SELECT id_a, id_b, CAST(dist2 AS BIGINT) AS dist2
-    FROM cand WHERE dist2 <= 2000 * 2000
-"""
-
-
-def spatial_build(spark, sf_dir):
-    """Grid-bucketed radius join: all point pairs within r = 2000 of
-    each other, found by hashing points into r-sized grid cells and
-    joining each cell against its 3x3 neighborhood — candidates are
-    O(points per neighborhood), never the quadratic cross join, and
-    the exact integer-squared-distance refine runs only on candidates.
-    This is the canonical distributed spatial join (geohash bucketing);
-    the shuffle key is the cell id. The 3x3 window is exhaustive for
-    radius <= cell size: any pair within r differs by < 1 cell per
-    axis. Coordinates here are deterministic md5-derived integers (no
-    geometry in the star schema — the harness pins the plumbing)."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
-    (documents,) = _t(spark, sf_dir, "documents")
-
-    def coord(tag):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(tag),
-                            F.lit("spark-graft"),
-                            F.col("doc_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100000
-        )
-
-    pts = documents.select(
-        F.col("doc_id").alias("id"),
-        coord("geo-x").alias("x"),
-        coord("geo-y").alias("y"),
-    ).select(
-        "id",
-        "x",
-        "y",
-        F.floor(F.col("x") / 2000).cast("long").alias("cx"),
-        F.floor(F.col("y") / 2000).cast("long").alias("cy"),
-    )
-    # The 3x3 neighborhood is joined as a pure EQUI join: side a
-    # explodes its 9 neighbor cell ids into the join key, so the
-    # candidate stage is a hash join on (cell_x, cell_y) — never a
-    # nested-loop range join (which is what a BETWEEN condition would
-    # plan to, and what the catalog's plan invariants forbid).
-    offs = F.expr(
-        "explode(transform(sequence(0, 8), "
-        "i -> struct(i div 3 - 1 AS dx, i % 3 - 1 AS dy)))"
-    )
-    a = pts.select("id", "x", "y", "cx", "cy", offs.alias("o")).select(
-        F.col("id").alias("id_a"),
-        F.col("x").alias("xa"),
-        F.col("y").alias("ya"),
-        (F.col("cx") + F.col("o.dx")).alias("jx"),
-        (F.col("cy") + F.col("o.dy")).alias("jy"),
-    )
-    b = pts.select(
-        F.col("id").alias("id_b"),
-        F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        F.col("cx").alias("jx"),
-        F.col("cy").alias("jy"),
-    )
-    dist2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
-        F.col("ya") - F.col("yb")
-    ) * (F.col("ya") - F.col("yb"))
-    return (
-        a.join(b, ["jx", "jy"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            dist2.cast("bigint").alias("dist2"),
-        )
-        .filter(F.col("dist2") <= 2000 * 2000)
-    )
-
-
-# RETIRED r12 (saturation policy — N stays 150): spatial_radius_pairs'
-# integer-Euclidean grid pair join is fully shadowed by the r11 geo
-# family, which gates the IDENTICAL 3x3 cell-explode equi-join shape
-# twice over (geo_nn_on_sphere: corpus self-pairs + trig refine;
-# geo_haversine_radius: broadcast probe) on the same md5-portable
-# derivation. Its front slot goes to geo_way_lengths (plans/geo.py) —
-# the reference's ordered way->node polyline, the one distinctive
-# reference structure that had no driver gate. The (build, oracle) pair
-# stays exported: tests/test_retired.py compares the full semantics
-# every run, and tests/test_similarity.py keeps the brute-force
-# exhaustiveness proof.
-SPATIAL_RETIRED = (spatial_build, SPATIAL_ORACLE)
-
-
-#: queue plans whose physical plan legitimately contains a
-#: BroadcastNestedLoopJoin — every one is a broadcast 1-row scalar
-#: stitch (the same intended-BNLJ class the catalog whitelists). COPY
-#: these into tests/test_catalog_plan_invariants.BNLJ_WHITELIST when
-#: registering at r08; tests/test_r08_queue.py enforces the invariant
-#: (with this whitelist) on the queue already.
-BNLJ_OK = {
-    "minhash_recall_curve",  # broadcast 1-row recall denominators stitch
-    # dedup_cluster_size_hist held a slot here until its r18 retirement
-    "ks_split_drift",  # broadcast 1-row (n_train, n_holdout) totals
-    "chi2_type_weekday",  # broadcast 1-row grand-total stitch
-    "rfm_segment_counts",  # broadcast 1-row global max order date
-    "basket_lift_pairs",  # broadcast 1-row basket-count stitch
-    "ab_test_zscore",  # broadcast 1-row above-average-threshold stitch
-    "revenue_concentration",  # two broadcast 1-row scalar stitches
-}
 
 
 #: market-basket association rules over (user, day) baskets of event
@@ -1610,6 +1211,7 @@ BASKET_ORACLE = """
 """
 
 
+@query("basket_lift_pairs", BASKET_ORACLE)
 def basket_build(spark, sf_dir):
     """Association-rule mining over (user, day) baskets: pairwise
     support, confidence and lift between event types — the co-occurrence
@@ -1619,8 +1221,6 @@ def basket_build(spark, sf_dir):
     Scale: baskets is one DISTINCT on (user, day, type); the pair join
     is per-basket (bounded by |types|² per basket, never cross-corpus);
     item/total margins broadcast back onto the |types|²-row result."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     baskets = (
         events.select(
@@ -1688,9 +1288,6 @@ def basket_build(spark, sf_dir):
     )
 
 
-QUEUE["basket_lift_pairs"] = (basket_build, BASKET_ORACLE)
-
-
 #: sweep-line concurrency: maximum number of users simultaneously "in
 #: session" per day, from per-(user, day) activity intervals
 #: [first event, last event] in exact integer microseconds. CLOSED
@@ -1720,6 +1317,7 @@ CONCURRENCY_ORACLE = """
 """
 
 
+@query("daily_peak_concurrency", CONCURRENCY_ORACLE)
 def concurrency_build(spark, sf_dir):
     """Peak concurrency per day (sweep line): each (user, day) activity
     interval contributes +1 at its first event and -1 at its last; the
@@ -1729,10 +1327,6 @@ def concurrency_build(spark, sf_dir):
     planning's favorite query, in pure integer arithmetic. Scale: one (user, day) agg, then
     the sweep window partitioned BY DAY (each day's point list is
     bounded); no global ordering anywhere."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     iv = events.groupBy(
@@ -1755,9 +1349,6 @@ def concurrency_build(spark, sf_dir):
     return swept.groupBy("day").agg(
         F.max("live").cast("bigint").alias("max_concurrent")
     ).select(F.col("day").cast("string").alias("day"), "max_concurrent")
-
-
-QUEUE["daily_peak_concurrency"] = (concurrency_build, CONCURRENCY_ORACLE)
 
 
 #: revenue concentration audit — Gini coefficient + top-10%/20% revenue
@@ -1801,6 +1392,7 @@ CONCENTRATION_ORACLE = """
 """
 
 
+@query("revenue_concentration", CONCENTRATION_ORACLE)
 def concentration_build(spark, sf_dir):
     """Revenue concentration: Gini coefficient (rank-weighted form,
     G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n over ascending-sorted spend) plus
@@ -1808,10 +1400,6 @@ def concentration_build(spark, sf_dir):
     'do 20% of customers drive 80% of revenue'. Exact-integer
     numerators; final divisions only. Scale: one custkey agg, two rank
     windows on the |customers| relation, three scalar stitches."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (orders,) = _t(spark, sf_dir, "orders")
     pc = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
@@ -1882,9 +1470,6 @@ def concentration_build(spark, sf_dir):
     )
 
 
-QUEUE["revenue_concentration"] = (concentration_build, CONCENTRATION_ORACLE)
-
-
 #: two-proportion A/B z-test on the deterministic hash split of USERS:
 #: conversion = user had a purchase event. Counts exact; the z
 #: statistic is a staged IEEE formula (divisions, one sqrt — no libm
@@ -1935,6 +1520,7 @@ AB_TEST_ORACLE = """
 """
 
 
+@query("ab_test_zscore", AB_TEST_ORACLE)
 def ab_test_build(spark, sf_dir):
     """Two-proportion z-test between deterministic hash-assigned A/B
     arms (conversion = ABOVE-AVERAGE purchaser, decided by the exact
@@ -1948,8 +1534,6 @@ def ab_test_build(spark, sf_dir):
     splits (x = 0 or x = n) emit NULL rather than dividing by zero.
     Scale: one user_id agg, a broadcast 1-row threshold stitch, a
     1-row fold."""
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     arm = F.when(
         F.conv(
@@ -2050,9 +1634,6 @@ def ab_test_build(spark, sf_dir):
     )
 
 
-QUEUE["ab_test_zscore"] = (ab_test_build, AB_TEST_ORACLE)
-
-
 #: log2-bucketed inter-event gap histogram WITHOUT logs: the bucket is
 #: the binary-representation length of the exact microsecond gap
 #: (length(bin(gap)) = floor(log2(gap)) + 1, pure integer), sidestepping
@@ -2072,16 +1653,13 @@ GAP_HIST_ORACLE = """
 """
 
 
+@query("gap_log2_hist", GAP_HIST_ORACLE)
 def gap_hist_build(spark, sf_dir):
     """Burstiness profile: per-user inter-event gaps (exact integer
     microseconds) bucketed by binary magnitude — length(bin(gap)) IS
     floor(log2)+1 without touching floating point, so the histogram is
     libm-free by construction. Scale: one user_id window shuffle, one
     bounded-domain aggregation (<= 64 buckets)."""
-    from pyspark.sql import Window
-
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
-
     (events,) = _t(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2095,25 +1673,3 @@ def gap_hist_build(spark, sf_dir):
         F.min("gap_us").cast("bigint").alias("min_gap_us"),
         F.max("gap_us").cast("bigint").alias("max_gap_us"),
     )
-
-
-QUEUE["gap_log2_hist"] = (gap_hist_build, GAP_HIST_ORACLE)
-
-
-# ---------------------------------------------------------------------------
-# Round-8 registration (the move this queue existed for): every validated
-# (build, oracle) pair enters the live catalog. catalog._load_all imports
-# this module, so the registry sees all 24; _GATE_PRIORITY fronts them next
-# to the 26-name r05-green park (exact 50-slot fill — capacity math at
-# plans/catalog.py:_GATE_PRIORITY). The QUEUE dict stays exported for
-# tests/test_r08_queue_edges.py's robustness sweep.
-# ---------------------------------------------------------------------------
-def _register() -> None:
-    from amsterdam_map_data_wrangling_spark.plans.catalog import query
-
-    for _name, (_build, _oracle) in QUEUE.items():
-        doc = " ".join((_build.__doc__ or "").split())
-        query(_name, _oracle, doc=doc)(_build)
-
-
-_register()

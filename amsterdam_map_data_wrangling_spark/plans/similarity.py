@@ -218,43 +218,23 @@ def ann_rand_lsh(spark, sf_dir):
     return ann_rand_lsh_topk(embeddings, "vec_id", "embedding", _QUERY_IDS, 3, bits=8)
 
 
-def _ivf_learned_sql(
-    iters: int = 2, dim: int = 64, k: int = 3, nprobe: int = 1
-) -> str:
+def _ivf_learned_sql(iters: int = 2, dim: int = 64, k: int = 3) -> str:
     """DuckDB twin of the learned-centroid IVF: the Lloyd CTE chain from
     operators/similarity.lloyd_assign_sql (the value-exact oracle twin of
-    the Spark-side stepwise Lloyd), with the search/rank tail appended.
-
-    ``nprobe`` > 1 ranks each query's cells the same way the Spark side's
-    ``_top_cells`` lexsort does — ``row_number() OVER (ORDER BY csim DESC,
-    c_id)`` over the final-generation similarity CTE (``s{iters+1}``, which
-    already holds every (vec_id, c_id, csim)) — and probes the top
-    ``nprobe``; corpus vectors live in exactly one cell, so probed
-    candidates never duplicate across cells."""
+    the Spark-side stepwise Lloyd), with the single-probe search/rank tail
+    appended."""
     from amsterdam_map_data_wrangling_spark.operators.similarity import (
         lloyd_assign_sql,
     )
 
     lloyd = lloyd_assign_sql(iters=iters, dim=dim)
     head, final = lloyd.rsplit("SELECT", 1)
-    if nprobe == 1:
-        q_cte = """, q AS (
-      SELECT vec_id AS qid, v AS qv, cell AS qcell FROM assign WHERE vec_id < 5
-    )"""
-    else:
-        q_cte = f""", qrank AS (
-      SELECT vec_id, c_id,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY csim DESC, c_id) AS rn
-      FROM s{iters + 1} WHERE vec_id < 5
-    ), q AS (
-      SELECT r.vec_id AS qid, e2.v AS qv, r.c_id AS qcell
-      FROM qrank r JOIN eqn e2 USING (vec_id) WHERE r.rn <= {nprobe}
-    )"""
     return (
         head
         + f""", assign AS (SELECT{final.rstrip()})
-    {q_cte}
+    , q AS (
+      SELECT vec_id AS qid, v AS qv, cell AS qcell FROM assign WHERE vec_id < 5
+    )
     , scored AS (
       SELECT qid, a.vec_id,
              round(list_dot_product(a.v, qv)
@@ -289,24 +269,6 @@ def _ivf_learned_sql(
 def ann_ivf(spark, sf_dir):
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     return ivf_topk(embeddings, "vec_id", "embedding", _QUERY_IDS, 3)
-
-
-#: ann_ivf_probe2 — RETIRED from the gate registry at round 11 (the
-#: N=150 saturation policy's retirement mechanism, third use after
-#: ilike_filter_count and sparse_cosine_topk) to free a front slot for
-#: the geospatial family (plans/geo.py). It was the lowest-marginal-
-#: evidence ANN gate: a one-knob variant (nprobe=2) of ann_ivf running
-#: the SAME ivf_topk code path — the dial's semantics (nested probe
-#: sets, monotone recall) stay pinned by tests/test_similarity.py and
-#: the full oracle compare lives on in tests/test_retired.py; the
-#: multi-cell broadcast plan shape stays pinned in
-#: tests/test_plan_shapes.py. Gate history: hash-green r07.
-ANN_IVF_PROBE2_ORACLE = _ivf_learned_sql(2, 64, 3, nprobe=2)
-
-
-def ann_ivf_probe2(spark, sf_dir):
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
-    return ivf_topk(embeddings, "vec_id", "embedding", _QUERY_IDS, 3, nprobe=2)
 
 
 @query(

@@ -1,6 +1,6 @@
-r"""Sparse-similarity and set-sketch gates: TF-IDF cosine (pairs and
-per-doc top-k), Bloom vocabulary overlap, and benchmark decontamination
-(the REMOVAL stage on top of the detection gate in plans/text.py).
+r"""Sparse-similarity and set-sketch gates: TF-IDF cosine pairs, Bloom
+vocabulary overlap, and benchmark decontamination (the REMOVAL stage on
+top of the detection gate in plans/text.py).
 Registered at round 7 from the validated r07 queue.
 
 Float-gate conventions: cosines rounded to 4 (the tfidf family's
@@ -17,7 +17,6 @@ from amsterdam_map_data_wrangling_spark.operators.sparse import (
     decontaminate,
     gram_hashes,
     sparse_cosine_pairs,
-    sparse_cosine_topk_per_doc,
 )
 from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
 
@@ -26,19 +25,16 @@ from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
 # pattern extended to the lexical family). The pair relation is the ONLY
 # lexical intermediate that clears the materialization bar: it is small
 # (bounded by the df-cap blocking) and expensive to build (term self-join
-# + dot aggregation), and two gates consume it. The token-proportional
-# relations (term_tf, the 5-gram stream) were measured SLOWER through a
-# row-based checkpoint than recomputed under whole-stage codegen, so
-# those stay per-query — see PLANS.md round-10 "what does NOT pay to
+# + dot aggregation). The token-proportional relations (term_tf, the
+# 5-gram stream) were measured SLOWER through a row-based checkpoint
+# than recomputed under whole-stage codegen, so those stay per-query — see PLANS.md round-10 "what does NOT pay to
 # share". bench.py's once-per-pass clear_graph_memo() resets this too.
 # ---------------------------------------------------------------------------
 
 
 def shared_sparse_pairs(spark, sf_dir, df_cap=50):
-    """Session-shared TF-IDF cosine pair relation at THRESHOLD 0 —
-    the two cosine gates used to run the term self-join + dot
-    aggregation twice (pairs at 0.3, top-k at 0.0). Stored
-    unthresholded (cosines are non-negative: tf·idf weights are
+    """Session-shared TF-IDF cosine pair relation at THRESHOLD 0.
+    Stored unthresholded (cosines are non-negative: tf·idf weights are
     positive), so the 0.3 gate is a pure post-filter of the cached
     frame — the shared_jaccard_pairs lowest-threshold rule, fixed at
     its floor."""
@@ -125,59 +121,6 @@ def sparse_cosine_pairs_gate(spark, sf_dir):
         .select("id_a", "id_b", F.round("cosine", 4).alias("cosine_r"))
     )
 
-
-#: the top-k oracle rewraps the pair oracle's CTE chain as a subquery —
-#: one source of truth for the weight/dot algebra.
-_SPARSE_TOPK_ORACLE = (
-    _SPARSE_COSINE_ORACLE.replace(
-        "SELECT id_a, id_b, round(dot / (na.nrm * nb.nrm), 4) AS cosine_r",
-        "SELECT id_a, id_b, dot / (na.nrm * nb.nrm) AS cosine",
-    ).replace("WHERE dot / (na.nrm * nb.nrm) >= 0.3", "")
-    .replace("WITH toks AS (", "WITH pairs_base AS (WITH toks AS (")
-    + """
-    ), sym AS (
-      SELECT id_a AS id, id_b AS partner, cosine FROM pairs_base
-      UNION ALL
-      SELECT id_b AS id, id_a AS partner, cosine FROM pairs_base
-    ), ranked AS (
-      SELECT id, partner, cosine,
-             row_number() OVER (
-               PARTITION BY id ORDER BY cosine DESC, partner) AS rnk
-      FROM sym
-    )
-    SELECT id, partner, round(cosine, 4) AS cosine_r,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM ranked WHERE rnk <= 3
-"""
-)
-
-
-#: sparse_cosine_topk — RETIRED from the gate registry at round 11 (the
-#: N=150 saturation policy's retirement mechanism) to free a front slot
-#: for the geospatial family (plans/geo.py). It was a low-marginal-
-#: evidence gate: a row_number window over the SAME shared pair
-#: relation sparse_cosine_pairs gates (since r10 they literally share
-#: the memoized threshold-0 relation), and per-group top-k windows are
-#: independently gated by topn_per_group / window_function_zoo /
-#: sparse_cosine_pairs' own ranked consumers. The full oracle compare
-#: lives on in tests/test_retired.py; the operator itself
-#: (sparse_cosine_topk_per_doc) keeps its unit tests. Gate history:
-#: hash-green r07.
-def sparse_cosine_topk_gate(spark, sf_dir):
-    (documents,) = _t(spark, sf_dir, "documents")
-    return sparse_cosine_topk_per_doc(
-        documents.select("doc_id", "text"),
-        "doc_id",
-        "text",
-        k=3,
-        df_cap=50,
-        pairs=shared_sparse_pairs(spark, sf_dir, df_cap=50),
-    ).select(
-        "id",
-        "partner",
-        F.round("cosine", 4).alias("cosine_r"),
-        F.col("rnk").cast("bigint").alias("rnk"),
-    )
 
 
 @query(

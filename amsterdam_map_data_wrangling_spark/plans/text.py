@@ -466,50 +466,6 @@ def quality_filter_pipeline(spark, sf_dir):
     )
 
 
-#: quality_components — RETIRED from the gate registry at round 18
-#: (same retirement batch as the dedup portable twins; slots freed for
-#: the three probe-affected r16-cohort levers + the two new operator
-#: gates). Lowest marginal evidence in the quality family: the same
-#: component machinery (punct/stopword/upper ratios from
-#: functions/text.py) is computed INSIDE the still-gated
-#: quality_filter_pipeline (r17 green — features-before-dedup stage),
-#: and quality_scores keeps the composite per-doc quality relation
-#: gated in this cohort. The full oracle compare lives on in
-#: tests/test_retired.py.
-QUALITY_COMPONENTS_ORACLE = r"""
-    SELECT doc_id,
-           round((length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')))
-                 / CAST(length(text) AS DOUBLE), 4) AS punct_ratio,
-           round(len(list_filter(string_split_regex(trim(text), '\s+'),
-                     t -> list_contains(['the','a','an','and','or','of','to','in',
-                                         'is','it','that','for','on','with','as',
-                                         'was','at','by','be'], t)))
-                 / CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE), 4)
-             AS stopword_ratio,
-           round(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                 / CAST(length(text) AS DOUBLE), 4) AS upper_ratio
-    FROM documents
-    """
-
-
-def quality_components(spark, sf_dir):
-    from amsterdam_map_data_wrangling_spark.functions.text import (
-        punct_ratio,
-        stopword_ratio_tokens,
-        uppercase_ratio,
-    )
-
-    (documents,) = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    toked = documents.select("doc_id", t.alias("text"), tokens(t).alias("toks"))
-    return toked.select(
-        "doc_id",
-        F.round(punct_ratio(F.col("text")), 4).alias("punct_ratio"),
-        F.round(stopword_ratio_tokens(F.col("toks")), 4).alias("stopword_ratio"),
-        F.round(uppercase_ratio(F.col("text")), 4).alias("upper_ratio"),
-    )
-
-
 @query(
     "chunk_documents",
     r"""
@@ -559,33 +515,11 @@ def chunk_documents(spark, sf_dir):
     )
 
 
-#: token_budget_pack — RETIRED from the gate registry at round 11 (the
-#: N=150 saturation policy's retirement mechanism) to free a front slot
-#: for leakage_free_split (plans/dedup.py). It was the lowest-marginal-
-#: evidence gate standing: token_budget_pack_sharded value-gates the
-#: IDENTICAL oracle (byte-for-byte the same SQL) through the 2-level
-#: scale-safe plan, so this 1-level variant added a second verdict for
-#: the same output relation. The full oracle compare lives on in
-#: tests/test_retired.py.
-TOKEN_BUDGET_PACK_ORACLE = r"""
-    WITH sized AS (
-      SELECT lang, doc_id,
-             len(string_split_regex(trim(text), '\s+')) AS n_tokens
-      FROM documents
-    ), cum AS (
-      SELECT lang, doc_id, n_tokens,
-             SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum_tokens
-      FROM sized
-    )
-    SELECT lang,
-           COUNT(*) AS n_docs_kept,
-           CAST(SUM(n_tokens) AS BIGINT) AS tokens_kept
-    FROM cum WHERE cum_tokens <= 10000
-    GROUP BY lang
-    """
-
-
+#: token_budget_pack — RETIRED from the gate registry at round 11: the
+#: registered token_budget_pack_sharded gates the same oracle through the
+#: 2-level scale-safe plan. This 1-level plan stays as the reference
+#: tests/test_chunking.py compares the sharded plan against; its DuckDB
+#: compare (tests/test_retired.py) reads the sharded query's oracle.
 def token_budget_pack(spark, sf_dir):
     from pyspark.sql import Window
 

@@ -23,10 +23,10 @@ BNLJ_WHITELIST = {
     # ---- r07 queue graduates (all broadcast 1-row scalar stitches) ----
     "winsorize_price_stats",  # broadcast 1-row percentile cut points
     "unigram_lm_scores",  # broadcast 1-row (n_total, n_vocab) model totals
-    # (sparse_cosine_pairs / sparse_cosine_topk: the tfidf 1-row
-    # corpus-size stitch now happens inside the session-shared pair
-    # build — plans/sparse.shared_sparse_pairs — so their gate plans
-    # read a checkpointed relation and show no BNLJ of their own)
+    # (sparse_cosine_pairs: the tfidf 1-row corpus-size stitch happens
+    # inside the session-shared pair build — plans/sparse.shared_sparse_pairs
+    # — so its gate plan reads a checkpointed relation and shows no BNLJ
+    # of its own)
     "near_dup_transitivity",  # three 1-row graph aggregates → one row
     "decontaminate_stats",  # corpus/clean/residual 1-row counts → one row
     "bm25_search",  # broadcast 1-row (n_docs, n_toks) statistics stitch
@@ -34,15 +34,15 @@ BNLJ_WHITELIST = {
     "ann_sq8_rerank",  # tiny broadcast query-code set vs corpus scoring
     "incremental_dedup_stats",  # three 1-row census aggregates → one row
     "leakage_free_split",  # 1-row leaked-pairs audit stitched to 2 rows
+    # ---- plans/r08_queue.py ----
+    "minhash_recall_curve",  # broadcast 1-row recall denominators stitch
+    "ks_split_drift",  # broadcast 1-row (n_train, n_holdout) totals
+    "chi2_type_weekday",  # broadcast 1-row grand-total stitch
+    "rfm_segment_counts",  # broadcast 1-row global max order date
+    "basket_lift_pairs",  # broadcast 1-row basket-count stitch
+    "ab_test_zscore",  # broadcast 1-row above-average-threshold stitch
+    "revenue_concentration",  # two broadcast 1-row scalar stitches
 }
-
-# r08-queue graduates: the 8 documented 1-row / fixed-size stitches,
-# reviewed pair-by-pair at queue build time (comments at
-# plans/r08_queue.py:BNLJ_OK) — registration unions them in rather than
-# duplicating the rationale here.
-from amsterdam_map_data_wrangling_spark.plans.r08_queue import BNLJ_OK
-
-BNLJ_WHITELIST |= BNLJ_OK
 
 #: the deliberate row-Python surface gates; everything else must stay
 #: JVM-side or Arrow-batched.

@@ -16,10 +16,6 @@ from .conftest import SF_ORACLE
 
 
 def _plan(spark, name: str) -> str:
-    from amsterdam_map_data_wrangling_spark.plans.catalog import _load_all
-
-    _load_all()  # registration is import-driven; -k runs must not rely
-    # on another test having imported every plan module
     df = QUERIES[name].build(spark, SF_ORACLE)
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -156,11 +152,13 @@ def test_ivf_probe2_broadcasts_probes_never_corpus(spark):
     """nprobe=2 must add broadcast (qid, qcell) rows, NOT plan shape: the
     corpus-side assignment feeds one BroadcastHashJoin on the cell key
     (corpus never broadcast, never cartesian), and the only corpus
-    exchange remains the per-query rank merge. (Retired from the gate
-    registry r11 — the plan-shape pin stays.)"""
-    from amsterdam_map_data_wrangling_spark.plans.similarity import ann_ivf_probe2
+    exchange remains the per-query rank merge."""
+    from amsterdam_map_data_wrangling_spark.operators.similarity import ivf_topk
+    from amsterdam_map_data_wrangling_spark.plans.catalog import _t
+    from amsterdam_map_data_wrangling_spark.plans.similarity import _QUERY_IDS
 
-    df = ann_ivf_probe2(spark, SF_ORACLE)
+    (embeddings,) = _t(spark, SF_ORACLE, "embeddings")
+    df = ivf_topk(embeddings, "vec_id", "embedding", _QUERY_IDS, 3, nprobe=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan

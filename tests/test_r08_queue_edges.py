@@ -1,9 +1,10 @@
-"""Degenerate-corpus robustness for the ENTIRE r08 queue: a 1-row
-corpus (one user, one event, one document, one order, one vector) must
-never crash a queued plan — divisions by empty strata return NULL, pair
-stages return empty, ANSI mode stays on. This is the preemptive version
-of the NULL/degenerate-input findings past ADVICE rounds raised against
-winsorize and robust-z."""
+"""Degenerate-corpus robustness for every query in plans/r08_queue.py:
+a 1-row corpus (one user, one event, one document, one order, one
+vector) must never crash a plan — divisions by empty strata return
+NULL, pair stages return empty, ANSI mode stays on. This is the
+preemptive version of the NULL/degenerate-input findings past ADVICE
+rounds raised against winsorize and robust-z. Also pins the half-way
+rounding case of embedding_label_centroids against its oracle."""
 
 from __future__ import annotations
 
@@ -11,7 +12,16 @@ import datetime
 
 import pytest
 
-from amsterdam_map_data_wrangling_spark.plans.r08_queue import QUEUE
+from amsterdam_map_data_wrangling_spark.plans import r08_queue
+from amsterdam_map_data_wrangling_spark.plans.catalog import QUERIES
+
+from .oracle import compare, duckdb_con
+
+R08_QUERIES = sorted(
+    name
+    for name, spec in QUERIES.items()
+    if spec.build.__module__ == r08_queue.__name__
+)
 
 
 @pytest.fixture(scope="module")
@@ -55,8 +65,50 @@ def tiny_sf(spark, tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("name", sorted(QUEUE))
+def test_r08_module_registers_21_queries():
+    assert len(R08_QUERIES) == 21
+
+
+@pytest.mark.parametrize("name", R08_QUERIES)
 def test_queue_build_survives_one_row_corpus(spark, tiny_sf, name):
-    build, _oracle = QUEUE[name]
-    rows = build(spark, tiny_sf).collect()  # must not raise
+    rows = QUERIES[name].build(spark, tiny_sf).collect()  # must not raise
     assert isinstance(rows, list)
+
+
+def test_centroid_half_way_mean_rounds_like_duckdb(spark, tmp_path):
+    """48 vectors of one label whose dim-1 components quantize to a sum
+    of 3057: the mean 3057/48/1000 = 0.0636875 is a half-way case at 6
+    decimals. The nearest double lies just below the half, so DuckDB's
+    round(x, 6) gives 0.063687; Spark's round(x, 6) rounds the decimal
+    string "0.0636875" up to 0.063688 unless the build rounds x * 1e6."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    q = [64] * 47 + [3057 - 64 * 47]
+    d = str(tmp_path)
+    # one parquet FILE (not Spark's part-file directory) so DuckDB's
+    # read_parquet sees the same table
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(q)), pa.int64()),
+                "embedding": pa.array(
+                    [[qi / 1000.0] + [0.0] * 63 for qi in q],
+                    pa.list_(pa.float32()),
+                ),
+                "label": pa.array([7] * len(q), pa.int32()),
+            }
+        ),
+        f"{d}/embeddings.parquet",
+    )
+    spec = QUERIES["embedding_label_centroids"]
+    con = duckdb_con(d)
+    try:
+        (sq,) = con.sql(
+            "SELECT CAST(SUM(floor(CAST(embedding AS DOUBLE[])[1] * 1000"
+            " + 0.5)) AS BIGINT) FROM embeddings"
+        ).fetchone()
+        assert sq == 3057
+        compare(spec.build(spark, d), con, spec.oracle)
+    finally:
+        con.close()

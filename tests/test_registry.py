@@ -124,31 +124,42 @@ def test_gate_priority_orders_catalog():
 
 
 def test_package_init_registers_every_query_module():
-    """bench.py (and any `from ...plans.queries import QUERIES` user)
-    relies on the package __init__'s import list for registration side
-    effects; catalog._load_all is the other copy of that list. They must
-    name the SAME modules — round 11 found `geo` present in _load_all but
-    missing from __init__, silently shrinking bench.py's catalog to 148."""
+    """Importing the package is the one registration path: every
+    plans/*.py that calls ``query`` must be imported by
+    plans/__init__.py. Round 11 found ``geo`` missing from that import
+    list, which silently shrank bench.py's catalog to 148 queries."""
     import ast
-    import inspect
+    from pathlib import Path
 
     from amsterdam_map_data_wrangling_spark import plans
-    from amsterdam_map_data_wrangling_spark.plans import catalog
+    from amsterdam_map_data_wrangling_spark.plans.catalog import QUERIES
 
-    def imported_names(source: str) -> set[str]:
-        names: set[str] = set()
-        for node in ast.walk(ast.parse(source)):
-            if (
-                isinstance(node, ast.ImportFrom)
-                and node.module == "amsterdam_map_data_wrangling_spark.plans"
-            ):
-                names |= {a.name for a in node.names}
-        return names
+    pkg = Path(plans.__file__).parent
 
-    init_mods = imported_names(inspect.getsource(plans))
-    load_all_mods = imported_names(
-        inspect.getsource(catalog._load_all)
-    )
-    assert load_all_mods <= init_mods, (
-        f"plans/__init__.py is missing {load_all_mods - init_mods}"
+    def calls_query(tree: ast.AST) -> bool:
+        return any(
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "query"
+            for node in ast.walk(tree)
+        )
+
+    init = ast.parse((pkg / "__init__.py").read_text())
+    imported = {
+        alias.name
+        for node in ast.walk(init)
+        if isinstance(node, ast.ImportFrom)
+        and node.module == plans.__name__
+        for alias in node.names
+    }
+    registering = {
+        path.stem
+        for path in pkg.glob("*.py")
+        if calls_query(ast.parse(path.read_text()))
+    }
+    assert registering >= {
+        spec.build.__module__.rsplit(".", 1)[1] for spec in QUERIES.values()
+    }
+    assert not registering - imported, (
+        f"plans/__init__.py does not import {registering - imported}"
     )

@@ -1,66 +1,15 @@
-"""Retired-query coverage: a query removed from the gate registry under
-the N=150 saturation policy keeps its oracle compare HERE, so retirement
-sheds a verdict slot, never the semantics."""
+"""Retired-query coverage. A query retired from the gate registry leaves
+the package, unless its DuckDB compare here is the only value gate of
+some operator arithmetic, or a test uses its builder as a reference.
+Three stay: ``ann_rand_lsh`` (seeded random-plane code),
+``dedup_simhash_portable`` (SimHash bit-vote arithmetic) and
+``token_budget_pack`` (the 1-level plan tests/test_chunking.py compares
+the sharded plan against)."""
 
 from __future__ import annotations
 
-from amsterdam_map_data_wrangling_spark.plans.queries import (
-    ILIKE_FILTER_ORACLE,
-    ilike_filter_count,
-)
-from amsterdam_map_data_wrangling_spark.plans.similarity import (
-    ANN_IVF_PROBE2_ORACLE,
-    ann_ivf_probe2,
-)
-from amsterdam_map_data_wrangling_spark.plans.features import (
-    UNIFORM_SAMPLE_ORACLE,
-    uniform_sample_per_group,
-)
-from amsterdam_map_data_wrangling_spark.plans.sparse import (
-    _SPARSE_TOPK_ORACLE,
-    sparse_cosine_topk_gate,
-)
-from amsterdam_map_data_wrangling_spark.plans.r08_queue import (
-    SPATIAL_RETIRED,
-)
-from amsterdam_map_data_wrangling_spark.plans.text import (
-    TOKEN_BUDGET_PACK_ORACLE,
-    token_budget_pack,
-)
-
 from .conftest import SF_ORACLE
 from .oracle import compare, duckdb_con
-
-
-def test_retired_ilike_filter_count_still_matches_oracle(spark):
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(ilike_filter_count(spark, SF_ORACLE), con, ILIKE_FILTER_ORACLE)
-    finally:
-        con.close()
-
-
-def test_retired_ann_ivf_probe2_still_matches_oracle(spark):
-    """Retired r11 (slot went to geo_haversine_radius): the nprobe=2
-    dial's full output still matches the exact-integer IVF oracle."""
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(ann_ivf_probe2(spark, SF_ORACLE), con, ANN_IVF_PROBE2_ORACLE)
-    finally:
-        con.close()
-
-
-def test_retired_sparse_cosine_topk_still_matches_oracle(spark):
-    """Retired r11 (slot went to geo_nn_on_sphere): the per-doc top-3
-    window over the shared TF-IDF pair relation still matches the
-    rewrapped pair oracle."""
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(
-            sparse_cosine_topk_gate(spark, SF_ORACLE), con, _SPARSE_TOPK_ORACLE
-        )
-    finally:
-        con.close()
 
 
 def test_retired_are_not_registered(spark):
@@ -84,44 +33,22 @@ def test_retired_are_not_registered(spark):
         assert occupant in QUERIES  # the slot's new occupant
 
 
-def test_retired_uniform_sample_still_matches_oracle(spark):
-    """Retired r11 (slot went to dup_span_removal): the exact-k hash-rank
-    sample still matches its oracle — the weight==const special case of
-    the still-gated weighted_sample_per_group."""
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(
-            uniform_sample_per_group(spark, SF_ORACLE),
-            con,
-            UNIFORM_SAMPLE_ORACLE,
-        )
-    finally:
-        con.close()
-
-
 def test_retired_token_budget_pack_still_matches_oracle(spark):
     """Retired r11 (slot went to leakage_free_split): the 1-level packing
     plan still matches the oracle that token_budget_pack_sharded gates
-    byte-identically through the 2-level plan."""
+    through the 2-level plan."""
+    from amsterdam_map_data_wrangling_spark.plans.catalog import QUERIES
+    from amsterdam_map_data_wrangling_spark.plans.text import (
+        token_budget_pack,
+    )
+
     con = duckdb_con(SF_ORACLE)
     try:
         compare(
             token_budget_pack(spark, SF_ORACLE),
             con,
-            TOKEN_BUDGET_PACK_ORACLE,
+            QUERIES["token_budget_pack_sharded"].oracle,
         )
-    finally:
-        con.close()
-
-
-def test_retired_spatial_radius_pairs_still_matches_oracle(spark):
-    """Retired r12 (slot went to geo_way_lengths): the integer-Euclidean
-    grid pair join — the shape the r11 geo family gates twice over with
-    trig on top — still matches its exact-integer oracle."""
-    build, oracle = SPATIAL_RETIRED
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(build(spark, SF_ORACLE), con, oracle)
     finally:
         con.close()
 
@@ -144,27 +71,6 @@ def test_retired_ann_rand_lsh_still_matches_oracle(spark):
         con.close()
 
 
-def test_retired_dedup_minhash_portable_still_matches_oracle(spark):
-    """Retired r18 (slot batch for the five r18 front entrants): the md5
-    universal-hash MinHash signatures — a strict sub-computation of the
-    still-gated dedup_minhash_portable_pairs — still match the oracle
-    value-for-value."""
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        MINHASH_PORTABLE_ORACLE,
-        dedup_minhash_portable,
-    )
-
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(
-            dedup_minhash_portable(spark, SF_ORACLE),
-            con,
-            MINHASH_PORTABLE_ORACLE,
-        )
-    finally:
-        con.close()
-
-
 def test_retired_dedup_simhash_portable_still_matches_oracle(spark):
     """Retired r18: the md5-anchored 16-bit SimHash construction (bit
     votes + sign threshold) — construction twin of the still-gated
@@ -181,57 +87,5 @@ def test_retired_dedup_simhash_portable_still_matches_oracle(spark):
             con,
             SIMHASH_PORTABLE_ORACLE,
         )
-    finally:
-        con.close()
-
-
-def test_retired_quality_components_still_matches_oracle(spark):
-    """Retired r18: punct/stopword/upper ratios per doc — the same
-    component machinery the still-gated quality_filter_pipeline
-    composes — still match value-for-value."""
-    from amsterdam_map_data_wrangling_spark.plans.text import (
-        QUALITY_COMPONENTS_ORACLE,
-        quality_components,
-    )
-
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(
-            quality_components(spark, SF_ORACLE),
-            con,
-            QUALITY_COMPONENTS_ORACLE,
-        )
-    finally:
-        con.close()
-
-
-def test_retired_dedup_cluster_size_hist_still_matches_oracle(spark):
-    """Retired r18: the cluster-size histogram over the session-shared
-    component relation (labels hash-verified by the still-gated
-    dedup_clusters) still matches its oracle."""
-    from amsterdam_map_data_wrangling_spark.plans.r08_queue import (
-        CLUSTER_HIST_RETIRED,
-    )
-
-    build, oracle = CLUSTER_HIST_RETIRED
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(build(spark, SF_ORACLE), con, oracle)
-    finally:
-        con.close()
-
-
-def test_retired_neardup_degree_hist_still_matches_oracle(spark):
-    """Retired r18: the degree histogram over the df-capped near-dup
-    pair relation (pairs hash-verified by the still-gated
-    near_dup_transitivity/pagerank) still matches its oracle."""
-    from amsterdam_map_data_wrangling_spark.plans.r08_queue import (
-        DEGREE_HIST_RETIRED,
-    )
-
-    build, oracle = DEGREE_HIST_RETIRED
-    con = duckdb_con(SF_ORACLE)
-    try:
-        compare(build(spark, SF_ORACLE), con, oracle)
     finally:
         con.close()

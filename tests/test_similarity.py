@@ -330,39 +330,6 @@ def test_nearest_centroid_classify_separable_and_tiebreak(spark):
     assert preds == {0: 5, 1: 5}
 
 
-def test_spatial_radius_pairs_matches_brute_force(spark):
-    """The 3x3-neighborhood grid equi-join is EXHAUSTIVE for radius <=
-    cell size: identical pair set to the O(n^2) brute-force filter on
-    the same deterministic coordinates."""
-    import hashlib
-
-    from amsterdam_map_data_wrangling_spark.plans.r08_queue import (
-        spatial_build,
-    )
-
-    got = {
-        (r.id_a, r.id_b): r.dist2
-        for r in spatial_build(spark, SF_ORACLE).collect()
-    }
-
-    def coord(tag, i):
-        h = hashlib.md5(f"{tag}|spark-graft|{i}".encode()).hexdigest()[:15]
-        return int(h, 16) % 100000
-
-    pts = {
-        i: (coord("geo-x", i), coord("geo-y", i)) for i in range(500)
-    }
-    want = {}
-    ids = sorted(pts)
-    for ai in range(len(ids)):
-        for bi in range(ai + 1, len(ids)):
-            a, b = ids[ai], ids[bi]
-            d2 = (pts[a][0] - pts[b][0]) ** 2 + (pts[a][1] - pts[b][1]) ** 2
-            if d2 <= 2000 * 2000:
-                want[(a, b)] = d2
-    assert got == want
-
-
 def test_adaptive_sign_bits_pins_gate_widths():
     """The sf1 scale fix must NEVER change the gate: both shipped gate
     SFs (200 and 2,000 vectors) resolve to exactly the oracle's literal
