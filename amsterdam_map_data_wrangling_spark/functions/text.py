@@ -89,13 +89,6 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
-def punct_ratio(text: Column) -> Column:
-    """Punctuation chars / total chars — high values flag boilerplate,
-    code, or markup-polluted documents."""
-    stripped = F.regexp_replace(text, r"[^\w\s]", "")
-    return (F.length(text) - F.length(stripped)) / F.length(text)
-
-
 def stopword_ratio(text: Column) -> Column:
     """Stopword tokens / total tokens — natural prose sits around
     0.3-0.5; very low values flag lists, tables, and keyword spam."""
@@ -105,11 +98,6 @@ def stopword_ratio(text: Column) -> Column:
 def stopword_ratio_tokens(toks: Column) -> Column:
     """:func:`stopword_ratio` over an already-tokenized array column."""
     return marker_score_tokens(toks, STOPWORDS) / F.size(toks)
-
-
-def uppercase_ratio(text: Column) -> Column:
-    """Uppercase chars / total chars — shouting and header-heavy docs."""
-    return F.length(F.regexp_replace(text, r"[^A-Z]", "")) / F.length(text)
 
 
 def normalized_text(text: Column) -> Column:

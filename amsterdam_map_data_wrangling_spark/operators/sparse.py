@@ -55,16 +55,12 @@ def tfidf_weights(
     id_col: str,
     text_col: str,
     df_cap: int = 50,
-    tf: DataFrame | None = None,
 ) -> DataFrame:
     """(id, term hash ``t``, weight ``w``) with w = tf · idf,
     idf = ln((N+1)/(df+1)) + 1 (smoothed; exact-integer inputs so both
     engines/references compute identical doubles), stop-terms with
-    df > df_cap dropped. Pass a precomputed :func:`term_tf` relation via
-    ``tf`` to share the tokenize+hash pass across consumers (see
-    plans/sparse.shared_term_tf)."""
-    if tf is None:
-        tf = term_tf(df, id_col, text_col)
+    df > df_cap dropped."""
+    tf = term_tf(df, id_col, text_col)
     # document frequency per term + corpus size as a 1-row broadcast
     dfreq = tf.groupBy("t").agg(F.count("*").alias("df"))
     n_docs = df.select(
@@ -96,14 +92,12 @@ def sparse_cosine_pairs(
     text_col: str,
     threshold: float = 0.3,
     df_cap: int = 50,
-    tf: DataFrame | None = None,
 ) -> DataFrame:
     """All (id_a < id_b) pairs with TF-IDF cosine ≥ threshold:
     (id_a, id_b, cosine). Pairs are generated ONLY through shared
     surviving terms (term-key self-join) — disjoint-vocabulary docs are
-    never considered. ``tf`` optionally shares a precomputed
-    :func:`term_tf` relation."""
-    w = tfidf_weights(df, id_col, text_col, df_cap=df_cap, tf=tf)
+    never considered."""
+    w = tfidf_weights(df, id_col, text_col, df_cap=df_cap)
     norms = w.groupBy("id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
     )
@@ -135,18 +129,14 @@ def sparse_cosine_topk_per_doc(
     text_col: str,
     k: int = 3,
     df_cap: int = 50,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k most-similar partners per document (row_number over the
     symmetric pair relation; ties broken by partner id for a total
-    order). ``pairs`` optionally shares a precomputed THRESHOLD-0
-    (id_a, id_b, cosine) relation — top-k needs the unthresholded
-    pairs, so a thresholded relation here would silently drop
-    partners."""
-    if pairs is None:
-        pairs = sparse_cosine_pairs(
-            df, id_col, text_col, threshold=0.0, df_cap=df_cap
-        )
+    order). Built over the THRESHOLD-0 pairs: a thresholded relation
+    would silently drop partners."""
+    pairs = sparse_cosine_pairs(
+        df, id_col, text_col, threshold=0.0, df_cap=df_cap
+    )
     sym = pairs.select(
         F.col("id_a").alias("id"),
         F.col("id_b").alias("partner"),
@@ -293,8 +283,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    docs_grams: DataFrame | None = None,
-    bench_grams: DataFrame | None = None,
     contaminated_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Remove training documents sharing an exact word n-gram with a
@@ -312,23 +300,17 @@ def decontaminate(
     text ever moves for the decision. Gated as ``decontaminate_stats``
     (count gates + a literal-0 residual overlap, the pii residual-0
     contract)."""
-
-    # callers holding a session-shared (id, h) gram relation (see
-    # plans/sparse.shared_gram5) pass the pre-split legs in; the hashes
-    # are the same xxhash64 identity convention either way. Callers that
-    # already materialized the (tiny) contaminated-id relation — the
-    # decontaminate_stats gate shares it with its residual audit — pass
-    # it as ``contaminated_ids`` (one column, the doc id) and skip the
-    # gram build here entirely.
+    # callers that already materialized the (tiny) contaminated-id
+    # relation — the decontaminate_stats gate shares it with its residual
+    # audit — pass it as ``contaminated_ids`` (one column, the doc id)
+    # and skip the gram build here entirely.
     if contaminated_ids is None:
-        if bench_grams is None:
-            bench_grams = (
-                gram_hashes(bench, id_col, text_col, n).select("h").distinct()
-            )
-        if docs_grams is None:
-            docs_grams = gram_hashes(docs, id_col, text_col, n)
+        bench_grams = (
+            gram_hashes(bench, id_col, text_col, n).select("h").distinct()
+        )
         contaminated_ids = (
-            docs_grams.join(F.broadcast(bench_grams), "h")
+            gram_hashes(docs, id_col, text_col, n)
+            .join(F.broadcast(bench_grams), "h")
             .select("id")
             .distinct()
         )
@@ -353,7 +335,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    tf: DataFrame | None = None,
 ) -> DataFrame:
     """Okapi BM25 ranked retrieval over the corpus for a small fixed
     query set — the search primitive on top of the same hashed-term
@@ -375,13 +356,12 @@ def bm25_topk(
     exactly once."""
     from pyspark.sql import Window
 
-    if tf is None:
-        # FOUR consumers read tf (scored join, dl, dfreq, n_toks); the
-        # r10 "token-proportional relations recompute faster than they
-        # checkpoint" rule is for 2 consumers — at 4, one materialized
-        # build beats four tokenize+hash+agg passes (measured at the
-        # 10x scale point, round 12; the index build was the bm25 tail)
-        tf = term_tf(df, id_col, text_col).localCheckpoint(eager=False)
+    # FOUR consumers read tf (scored join, dl, dfreq, n_toks); the r10
+    # "token-proportional relations recompute faster than they
+    # checkpoint" rule is for 2 consumers — at 4, one materialized build
+    # beats four tokenize+hash+agg passes (measured at the 10x scale
+    # point, round 12; the index build was the bm25 tail)
+    tf = term_tf(df, id_col, text_col).localCheckpoint(eager=False)
 
     # dl (tokens per doc, with multiplicity) and n_toks are exact-integer
     # rollups of tf — a shared tf relation replaces the token scan for

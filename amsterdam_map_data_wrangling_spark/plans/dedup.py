@@ -66,15 +66,16 @@ def _with_copies(documents):
 # corpus bytes); a production pipeline would persist them to parquet
 # between stages, which is exactly what this memo stands in for in-session.
 #
-# The memo also hosts the OTHER session-shared derived relations that
-# clear the materialization bar (the TF-IDF cosine pair relation,
-# plans/sparse.shared_sparse_pairs) — one reset point (clear_graph_memo)
-# covers all of them, so bench.py's once-per-pass reset stays a single
-# call. Relations that do NOT clear the bar are deliberately absent:
-# token-proportional streams (term_tf, gram hashes) and the tiny
-# portable-signature relation all measured SLOWER read back from a
-# row-based checkpoint than recomputed under whole-stage codegen
-# (PLANS.md round-10 "what does NOT pay to share").
+# The memo also hosts the small driver-side facts the embedding plans
+# pick their shape from (plans/similarity: the corpus count and the hot
+# sign-LSH codes) — one reset point (clear_graph_memo) covers all of
+# them, so bench.py's once-per-pass reset stays a single call. A relation
+# is shared here only when it has at least two consumers; relations that
+# do NOT clear the bar are deliberately absent: token-proportional
+# streams (term_tf, gram hashes) and the tiny portable-signature relation
+# all measured SLOWER read back from a row-based checkpoint than
+# recomputed under whole-stage codegen (PLANS.md round-10 "what does NOT
+# pay to share").
 _GRAPH_MEMO: dict[tuple, object] = {}
 
 #: bounded memo: a long-lived session touching many sf_dirs (pytest,
@@ -88,26 +89,14 @@ _GRAPH_MEMO: dict[tuple, object] = {}
 _GRAPH_MEMO_MAX = 16
 
 
-def _memo_put(key: tuple, value: object) -> None:
-    # eviction + insert run under the master lock: with the per-key
-    # build locks, two threads putting DIFFERENT keys at capacity could
-    # both select the same oldest key and the second unguarded pop
-    # raised KeyError (r16 ADVICE — concurrent catalog execution is
-    # exactly the scenario the locks added). pop(..., None) is
-    # belt-and-braces against any future caller outside the lock.
-    with _GRAPH_MEMO_MASTER:
-        while len(_GRAPH_MEMO) >= _GRAPH_MEMO_MAX:
-            _GRAPH_MEMO.pop(next(iter(_GRAPH_MEMO)), None)
-        _GRAPH_MEMO[key] = value
-
-
 #: per-key build locks (r16 concurrent-catalog probe): the memo's
 #: check-then-act was race-free in value (both builds yield equivalent
 #: checkpointed relations; last put wins) but not in COST — a real
 #: cluster runs the catalog concurrently, and two consumers missing the
 #: same key both paid the full blocking+checkpoint build. Double-checked
 #: locking serializes builders of the SAME key only; different keys
-#: build in parallel. The master lock guards only the lock-dict itself.
+#: build in parallel. The master lock guards the lock-dict and the
+#: memo's eviction + insert.
 import threading as _threading  # noqa: E402
 
 _GRAPH_MEMO_MASTER = _threading.Lock()
@@ -132,7 +121,15 @@ def memo_get_or_build(key: tuple, build):
         v = _GRAPH_MEMO.get(key)
         if v is None:
             v = build()
-            _memo_put(key, v)
+            # eviction + insert run under the master lock: two threads
+            # inserting DIFFERENT keys at capacity could otherwise both
+            # select the same oldest key, and the second pop raised
+            # KeyError (r16 ADVICE — concurrent catalog execution is
+            # exactly the scenario the per-key locks exist for)
+            with _GRAPH_MEMO_MASTER:
+                while len(_GRAPH_MEMO) >= _GRAPH_MEMO_MAX:
+                    _GRAPH_MEMO.pop(next(iter(_GRAPH_MEMO)), None)
+                _GRAPH_MEMO[key] = v
         return v
 
 
@@ -148,7 +145,7 @@ def clear_graph_memo() -> None:
         _GRAPH_MEMO_LOCKS.clear()
 
 
-def _table_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
+def _table_fingerprint(sf_dir: str, table: str) -> tuple:
     """Cheap driver-side identity of a table's bytes: the
     (relpath, size, mtime_ns) listing of <table>.parquet (file or
     directory, RECURSIVE — a Hive-partitioned table keeps its data files
@@ -179,14 +176,17 @@ def _table_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
         return ()  # non-local / missing: fall back to sf_dir-only keying
 
 
-def _memo_key(spark, sf_dir, kind, w, df_cap, table="documents"):
+def memo_key(spark, sf_dir: str, table: str, *params) -> tuple:
+    """The memo key of a relation derived from ``table`` under
+    ``sf_dir``: scoped to this Spark application (a fresh session never
+    sees another session's checkpoint blocks) and to the table's current
+    bytes, then the caller's own parameters."""
     return (
         spark.sparkContext.applicationId,
         sf_dir,
+        table,
         _table_fingerprint(sf_dir, table),
-        kind,
-        w,
-        df_cap,
+        *params,
     )
 
 
@@ -227,33 +227,29 @@ def shared_jaccard_pairs(spark, sf_dir, w=5, threshold=0.5, df_cap=50):
     shared across consumers in this session. Builds the relation at
     min(threshold, _PAIRS_THRESHOLD_FLOOR) for (w, df_cap) so every
     registered threshold is served by filtering ONE build; an
-    unregistered request below the stored threshold still widens the
-    memo (rebuild at the lower value)."""
+    unregistered threshold below the floor gets its own memo entry."""
     build_threshold = min(threshold, _PAIRS_THRESHOLD_FLOOR)
-    key = _memo_key(spark, sf_dir, "pairs", w, df_cap)
-    cached = _GRAPH_MEMO.get(key)  # (threshold, DataFrame) | None
-    if cached is None or cached[0] > threshold:
-        with _memo_lock(key):
-            cached = _GRAPH_MEMO.get(key)  # double-check under the lock
-            if cached is None or cached[0] > threshold:
-                (documents,) = _t(spark, sf_dir, "documents")
-                # EAGER checkpoint, deliberately: the consumers include
-                # iterative plans (pagerank) whose broadcast-exchange jobs
-                # and per-iteration stages each hit the boundary BEFORE a
-                # lazy checkpoint would have materialized — measured
-                # 13.3 s cold vs 2.5 s eager at sf0.1 for
-                # near_dup_pagerank (the lazy RDD re-derived the full
-                # blocking lineage per job). The pair relation is tiny
-                # (linear in true near-dups), so the one materialization
-                # job is noise.
-                pairs = ngram_jaccard_pairs(
-                    documents, "doc_id", "text", w=w,
-                    threshold=build_threshold, df_cap=df_cap,
-                ).localCheckpoint()
-                _memo_put(key, (build_threshold, pairs))
-                cached = (build_threshold, pairs)
-    base_threshold, pairs = cached
-    if base_threshold == threshold:
+
+    def build():
+        (documents,) = _t(spark, sf_dir, "documents")
+        # EAGER checkpoint, deliberately: the consumers include iterative
+        # plans (pagerank) whose broadcast-exchange jobs and
+        # per-iteration stages each hit the boundary BEFORE a lazy
+        # checkpoint would have materialized — measured 13.3 s cold vs
+        # 2.5 s eager at sf0.1 for near_dup_pagerank (the lazy RDD
+        # re-derived the full blocking lineage per job). The pair
+        # relation is tiny (linear in true near-dups), so the one
+        # materialization job is noise.
+        return ngram_jaccard_pairs(
+            documents, "doc_id", "text", w=w,
+            threshold=build_threshold, df_cap=df_cap,
+        ).localCheckpoint()
+
+    key = memo_key(
+        spark, sf_dir, "documents", "pairs", w, build_threshold, df_cap
+    )
+    pairs = memo_get_or_build(key, build)
+    if threshold == build_threshold:
         return pairs
     return pairs.filter(F.col("jaccard") >= threshold)
 
@@ -263,7 +259,7 @@ def shared_jaccard_components(spark, sf_dir, w=5, threshold=0.5, df_cap=50):
     session — the three cluster consumers (clusters / keep-canonical /
     size histogram) each read the same label relation, whose backing
     blocks were cut by CC's own convergence-certificate action."""
-    key = _memo_key(spark, sf_dir, ("cc", threshold), w, df_cap)
+    key = memo_key(spark, sf_dir, "documents", "cc", w, threshold, df_cap)
     # nested locking is acyclic: the cc build waits on the pairs key,
     # never the reverse
     return memo_get_or_build(

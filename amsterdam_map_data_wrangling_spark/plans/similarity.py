@@ -35,11 +35,11 @@ def _corpus_count(spark, sf_dir, embeddings) -> int:
     (a rewritten corpus re-counts), and (c) bench.py's per-pass
     clear_graph_memo() keeps the bench honest — one count per pass."""
     from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        _memo_key,
         memo_get_or_build,
+        memo_key,
     )
 
-    key = _memo_key(spark, sf_dir, "emb_count", None, None, table="embeddings")
+    key = memo_key(spark, sf_dir, "embeddings", "emb_count")
     return memo_get_or_build(key, embeddings.count)
 
 
@@ -56,14 +56,11 @@ def _hot_codes(
     from pyspark.sql import functions as F
 
     from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        _memo_key,
         memo_get_or_build,
+        memo_key,
     )
 
-    key = _memo_key(
-        spark, sf_dir, f"hot_codes_{bits}_{min_rows}", None, None,
-        table="embeddings",
-    )
+    key = memo_key(spark, sf_dir, "embeddings", "hot_codes", bits, min_rows)
     return memo_get_or_build(
         key,
         lambda: [

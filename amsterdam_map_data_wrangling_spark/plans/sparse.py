@@ -20,52 +20,6 @@ from amsterdam_map_data_wrangling_spark.operators.sparse import (
 )
 from amsterdam_map_data_wrangling_spark.plans.catalog import _t, query
 
-# ---------------------------------------------------------------------------
-# Session-shared TF-IDF cosine pair relation (the plans/dedup._GRAPH_MEMO
-# pattern extended to the lexical family). The pair relation is the ONLY
-# lexical intermediate that clears the materialization bar: it is small
-# (bounded by the df-cap blocking) and expensive to build (term self-join
-# + dot aggregation). The token-proportional relations (term_tf, the
-# 5-gram stream) were measured SLOWER through a row-based checkpoint
-# than recomputed under whole-stage codegen, so those stay per-query — see PLANS.md round-10 "what does NOT pay to
-# share". bench.py's once-per-pass clear_graph_memo() resets this too.
-# ---------------------------------------------------------------------------
-
-
-def shared_sparse_pairs(spark, sf_dir, df_cap=50):
-    """Session-shared TF-IDF cosine pair relation at THRESHOLD 0.
-    Stored unthresholded (cosines are non-negative: tf·idf weights are
-    positive), so the 0.3 gate is a pure post-filter of the cached
-    frame — the shared_jaccard_pairs lowest-threshold rule, fixed at
-    its floor."""
-    from amsterdam_map_data_wrangling_spark.operators.sparse import (
-        sparse_cosine_pairs,
-    )
-    from amsterdam_map_data_wrangling_spark.plans.dedup import (
-        _memo_key,
-        memo_get_or_build,
-    )
-
-    def build():
-        (documents,) = _t(spark, sf_dir, "documents")
-        # tf is built INLINE from the parquet scan, not via a shared
-        # checkpoint: the token-proportional relations (term_tf, grams)
-        # measured SLOWER through a row-based checkpoint than recomputed
-        # under whole-stage codegen — only the small, join-expensive pair
-        # relation clears the materialization bar (see PLANS.md round-10
-        # "what does NOT pay to share").
-        return sparse_cosine_pairs(
-            documents.select("doc_id", "text"),
-            "doc_id",
-            "text",
-            threshold=0.0,
-            df_cap=df_cap,
-        ).localCheckpoint()
-
-    key = _memo_key(spark, sf_dir, "sparse_pairs", None, df_cap)
-    return memo_get_or_build(key, build)
-
-
 _SPARSE_COSINE_ORACLE = r"""
     WITH toks AS (
       SELECT doc_id AS id, unnest(string_split_regex(trim(text), '\s+')) AS tok
@@ -112,15 +66,14 @@ _SPARSE_COSINE_ORACLE = r"""
     "the stop-shingle bound in ngram_jaccard_pairs.",
 )
 def sparse_cosine_pairs_gate(spark, sf_dir):
-    # threshold 0.3 = post-filter of the shared threshold-0 relation
-    # (same dot/norm algebra, same doubles — the filter is on the
-    # already-computed cosine column)
-    return (
-        shared_sparse_pairs(spark, sf_dir, df_cap=50)
-        .filter(F.col("cosine") >= 0.3)
-        .select("id_a", "id_b", F.round("cosine", 4).alias("cosine_r"))
-    )
-
+    (documents,) = _t(spark, sf_dir, "documents")
+    return sparse_cosine_pairs(
+        documents.select("doc_id", "text"),
+        "doc_id",
+        "text",
+        threshold=0.3,
+        df_cap=50,
+    ).select("id_a", "id_b", F.round("cosine", 4).alias("cosine_r"))
 
 
 @query(

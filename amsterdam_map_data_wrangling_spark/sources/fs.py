@@ -84,11 +84,6 @@ def list_files(
     return sorted(out)
 
 
-def file_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _fs_and_path(spark, path)
-    return bool(fs.exists(hpath))
-
-
 # ---------------------------------------------------------------------------
 # Parquet footer probes (pyarrow.fs — object-store capable)
 #

@@ -220,23 +220,3 @@ def GapSessionsProcessor():
     """Instantiate the transformWithState sessionizer."""
     return _make_session_processor_class()()
 
-
-def streaming_gap_sessions_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas flavor of
-    :func:`streaming_gap_sessions` — same per-user totals through the
-    Spark 4 stateful API (typed ValueState, timer-capable handle).
-    Environment notes as streaming/stateful.py: needs the RocksDB state
-    store provider and ``google.protobuf`` at runtime."""
-    from pyspark.sql import functions as F
-
-    prepped = events.select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("us"),
-        "event_id",
-    )
-    return prepped.groupBy("user_id").transformWithStateInPandas(
-        GapSessionsProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )

@@ -23,10 +23,7 @@ BNLJ_WHITELIST = {
     # ---- r07 queue graduates (all broadcast 1-row scalar stitches) ----
     "winsorize_price_stats",  # broadcast 1-row percentile cut points
     "unigram_lm_scores",  # broadcast 1-row (n_total, n_vocab) model totals
-    # (sparse_cosine_pairs: the tfidf 1-row corpus-size stitch happens
-    # inside the session-shared pair build — plans/sparse.shared_sparse_pairs
-    # — so its gate plan reads a checkpointed relation and shows no BNLJ
-    # of its own)
+    "sparse_cosine_pairs",  # broadcast 1-row n_docs stitch (as tfidf_top_terms)
     "near_dup_transitivity",  # three 1-row graph aggregates → one row
     "decontaminate_stats",  # corpus/clean/residual 1-row counts → one row
     "bm25_search",  # broadcast 1-row (n_docs, n_toks) statistics stitch

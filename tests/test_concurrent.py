@@ -79,83 +79,61 @@ def test_memo_builds_once_under_contention(spark):
     assert len(builds) == 1, f"build ran {len(builds)}x under contention"
 
     # and the shared pair relation itself: 8 threaded consumers of the
-    # same (sf_dir, params) key produce one underlying build
-    dedup.clear_graph_memo()
+    # same (sf_dir, params) key produce one underlying build — also when
+    # they ask for different registered thresholds (0.3 and 0.5), which
+    # all read the one build at the floor
     real_builds = []
     orig = dedup.ngram_jaccard_pairs
 
     def counting(*a, **kw):
-        real_builds.append(1)
+        with build_lock:
+            real_builds.append(1)
         return orig(*a, **kw)
 
     dedup.ngram_jaccard_pairs = counting
     try:
-        with ThreadPoolExecutor(8) as ex:
-            res = list(
-                ex.map(
-                    lambda _i: dedup.shared_jaccard_pairs(
-                        spark, SF
-                    ).count(),
-                    range(8),
+        for thresholds in ([0.5] * 8, [0.3, 0.5] * 4):
+            dedup.clear_graph_memo()
+            real_builds.clear()
+            with ThreadPoolExecutor(8) as ex:
+                res = list(
+                    ex.map(
+                        lambda thr: dedup.shared_jaccard_pairs(
+                            spark, SF, threshold=thr
+                        ).count(),
+                        thresholds,
+                    )
                 )
+            by_thr = {}
+            for thr, n in zip(thresholds, res):
+                by_thr.setdefault(thr, set()).add(n)
+            assert all(len(ns) == 1 for ns in by_thr.values())
+            assert len(real_builds) == 1, (
+                f"pair relation built {len(real_builds)}x by 8 concurrent "
+                f"consumers at thresholds {sorted(set(thresholds))}"
             )
     finally:
         dedup.ngram_jaccard_pairs = orig
-    assert len(set(res)) == 1
-    assert len(real_builds) == 1, (
-        f"pair relation built {len(real_builds)}x by 8 concurrent "
-        f"consumers of one key"
-    )
-
-    # and the shared TF-IDF cosine pair relation (plans/sparse)
-    from amsterdam_map_data_wrangling_spark.operators import sparse as ops
-    from amsterdam_map_data_wrangling_spark.plans import sparse
-
-    dedup.clear_graph_memo()
-    cosine_builds = []
-    orig_cosine = ops.sparse_cosine_pairs
-
-    def counting_cosine(*a, **kw):
-        with build_lock:
-            cosine_builds.append(1)
-        return orig_cosine(*a, **kw)
-
-    ops.sparse_cosine_pairs = counting_cosine
-    try:
-        with ThreadPoolExecutor(8) as ex:
-            res = list(
-                ex.map(
-                    lambda _i: sparse.shared_sparse_pairs(spark, SF).count(),
-                    range(8),
-                )
-            )
-    finally:
-        ops.sparse_cosine_pairs = orig_cosine
-    assert len(set(res)) == 1
-    assert len(cosine_builds) == 1, (
-        f"cosine pair relation built {len(cosine_builds)}x by 8 "
-        f"concurrent consumers of one key"
-    )
 
 
 def test_memo_eviction_is_thread_safe():
-    """r16 ADVICE: _memo_put's FIFO eviction was check-then-act — at
-    capacity, two threads putting DIFFERENT keys could both select the
+    """r16 ADVICE: the memo's FIFO eviction was check-then-act — at
+    capacity, two threads inserting DIFFERENT keys could both select the
     same oldest key and the second pop raised KeyError. Eviction +
     insert now run under the master lock. This hammers the exact
-    scenario: the memo pinned at capacity, 16 threads inserting 2,000
+    scenario: the memo pinned at capacity, 16 threads building 2,000
     distinct keys — any KeyError propagates and fails the test — and
     the bound must hold throughout."""
     from amsterdam_map_data_wrangling_spark.plans import dedup
 
     dedup.clear_graph_memo()
     for i in range(dedup._GRAPH_MEMO_MAX):
-        dedup._memo_put(("seed", i), i)
+        dedup.memo_get_or_build(("seed", i), lambda i=i: i)
     assert len(dedup._GRAPH_MEMO) == dedup._GRAPH_MEMO_MAX
 
     def put_many(worker):
         for i in range(125):
-            dedup._memo_put(("w", worker, i), i)
+            dedup.memo_get_or_build(("w", worker, i), lambda i=i: i)
             assert len(dedup._GRAPH_MEMO) <= dedup._GRAPH_MEMO_MAX
 
     with ThreadPoolExecutor(16) as ex:

@@ -14,7 +14,7 @@ from amsterdam_map_data_wrangling_spark.operators.dedup import (
     simhash,
 )
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, SF_SMALL
 
 
 def _docs(spark):
@@ -767,12 +767,50 @@ def test_shared_pairs_floor_derived_from_consumer_registry(spark):
         sf = "/root/testdata/sf0.001"
         D.shared_jaccard_pairs(spark, sf, w=5, threshold=0.5, df_cap=50)
         assert len(D._GRAPH_MEMO) == 1
-        stored_thr, stored = next(iter(D._GRAPH_MEMO.values()))
-        assert stored_thr == D._PAIRS_THRESHOLD_FLOOR
+        # key = (app, sf_dir, table, fingerprint, "pairs", w, thr, df_cap)
+        stored_key, stored = next(iter(D._GRAPH_MEMO.items()))
+        assert stored_key[-2] == D._PAIRS_THRESHOLD_FLOOR
         # every registered threshold is served from the ONE stored build
         for thr in sorted(set(D.SHARED_PAIRS_CONSUMER_THRESHOLDS.values())):
             D.shared_jaccard_pairs(spark, sf, w=5, threshold=thr, df_cap=50)
             assert len(D._GRAPH_MEMO) == 1
-            assert next(iter(D._GRAPH_MEMO.values()))[1] is stored
+            assert next(iter(D._GRAPH_MEMO.values())) is stored
     finally:
         D.clear_graph_memo()
+
+
+def test_memo_reuse_and_reset(spark):
+    from amsterdam_map_data_wrangling_spark.plans import dedup as D
+
+    D.clear_graph_memo()
+    a = D.shared_jaccard_components(spark, SF_SMALL)
+    b = D.shared_jaccard_components(spark, SF_SMALL)
+    assert a is b, "second call must return the memoized frame"
+    assert len(D._GRAPH_MEMO) == 2  # the components and their pairs
+    D.clear_graph_memo()
+    assert not D._GRAPH_MEMO
+    c = D.shared_jaccard_components(spark, SF_SMALL)
+    assert c is not a, "reset must force a fresh build"
+
+
+def test_leakage_free_split_reuses_graph_memo(spark):
+    """leakage_free_split must READ the session-shared pair/component
+    relations, never rebuild the blocking: after one build primes the
+    memo, building the query again must add no new memo entries, and its
+    leaked-pairs audit must consume the same cached pair relation (the
+    plan shows checkpoint scans, not a fresh shingle aggregation)."""
+    import __spark_entry__  # noqa: F401
+    from amsterdam_map_data_wrangling_spark.plans import dedup as D
+    from amsterdam_map_data_wrangling_spark.plans.queries import QUERIES
+
+    D.clear_graph_memo()
+    df = QUERIES["leakage_free_split"].build(spark, SF_SMALL)
+    n_entries = len(D._GRAPH_MEMO)
+    assert n_entries >= 2  # pairs + components primed by one build
+    df2 = QUERIES["leakage_free_split"].build(spark, SF_SMALL)
+    assert len(D._GRAPH_MEMO) == n_entries  # pure cache hits
+    plan = df2._jdf.queryExecution().optimizedPlan().toString()
+    # both graph inputs arrive as materialized scans; the only shingle
+    # work in the plan would betray a rebuild
+    assert "shingle" not in plan.lower()
+    assert df.collect() == df2.collect()
