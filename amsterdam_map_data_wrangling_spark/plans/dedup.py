@@ -112,8 +112,8 @@ def memo_get_or_build(key: tuple, build):
     """Shared-memo read with a per-key build critical section: at most
     one caller per key runs ``build()``; the rest block on the lock and
     read the freshly-stored value. (A thread still holding a lock object
-    evicted by :func:`clear_graph_memo` only risks one duplicate build
-    right after a clear — a perf hiccup, never a wrong value.)"""
+    dropped by eviction or :func:`clear_graph_memo` only risks one
+    duplicate build right after — a perf hiccup, never a wrong value.)"""
     v = _GRAPH_MEMO.get(key)
     if v is not None:
         return v
@@ -128,7 +128,9 @@ def memo_get_or_build(key: tuple, build):
             # exactly the scenario the per-key locks exist for)
             with _GRAPH_MEMO_MASTER:
                 while len(_GRAPH_MEMO) >= _GRAPH_MEMO_MAX:
-                    _GRAPH_MEMO.pop(next(iter(_GRAPH_MEMO)), None)
+                    oldest = next(iter(_GRAPH_MEMO))
+                    _GRAPH_MEMO.pop(oldest, None)
+                    _GRAPH_MEMO_LOCKS.pop(oldest, None)
                 _GRAPH_MEMO[key] = v
         return v
 

@@ -207,9 +207,10 @@ def read_parquet_footers(files: list, filesystem) -> list:
 #: 50 ms/GET cost 1.74 s fanned 16-wide — only ~13% headroom under the
 #: ~2 s smallest plan delta that justifies probing at all. 32-wide
 #: restores it to a measured 1.01 s (~2x headroom,
-#: scripts/catalog_latency.py). 32 concurrent metadata GETs remains
-#: far below any object store's per-prefix request ceiling (thousands
-#: of GET/s), and the local-FS pool cost stays in the tens of ms.
+#: scripts/archive/catalog_latency_r18.json). 32 concurrent metadata
+#: GETs remains far below any object store's per-prefix request ceiling
+#: (thousands of GET/s), and the local-FS pool cost stays in the tens
+#: of ms.
 PROBE_FANOUT = 32
 
 

@@ -14,9 +14,8 @@ line on stdout: {"metric": ..., "value": total_sec, "unit": "sec",
 next to this script. One progress line per timed query goes to stderr.
 Exits 1 when a query raises or runs over $SPARK_GRAFT_BUDGET_SEC.
 
-`run_query`, `run_pass`, `run_canary` and `canary_ratio` are the
-helpers the probes in scripts/ call. README "bench.py" documents the
-protocol, the result fields and the history of the constants below.
+README "bench.py" documents the protocol, the result fields and the
+history of the constants below.
 """
 
 from __future__ import annotations
@@ -103,41 +102,35 @@ def run_query(spark, spec, sf_dir: str) -> dict:
     }
 
 
-def run_pass(spark, sf_dir: str, specs: dict, label: str, pool_map=map):
-    """Run each of ``specs`` ({name: spec}) once after a shared-memo
-    reset, through ``pool_map`` (``map`` runs them in order; a thread
-    pool's ``map`` runs them concurrently). Returns (runs, errors): the
-    run_query record per name, and "Type: message" per query that
-    raised. A progress line per query goes to stderr, so when the
-    process dies the query after the last line is the one that killed it.
+def run_pass(spark, sf_dir: str, specs: dict, label: str):
+    """Run each of ``specs`` ({name: spec}) once, in order, after a
+    shared-memo reset. Returns (runs, errors): the run_query record per
+    name, and "Type: message" per query that raised. A progress line per
+    query goes to stderr, so when the process dies the query after the
+    last line is the one that killed it.
     """
     # the session-shared relations (plans/dedup._GRAPH_MEMO) reset per
     # pass, not per query: each pass pays their builds once, and their
     # consumers time the shared read they run in a composed pipeline
     clear_graph_memo()
 
-    def one(name):
+    runs: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for name, spec in specs.items():
         try:
-            run = run_query(spark, specs[name], sf_dir)
+            run = run_query(spark, spec, sf_dir)
         except Exception as exc:  # recorded; the other queries still run
             print(f"{label} ERROR {name}", file=sys.stderr, flush=True)
             traceback.print_exc()
-            return f"{type(exc).__name__}: {exc}"[:300]
+            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+            continue
         print(
             f"{label} {run['total']:8.3f}s (build {run['build']:.3f}s, "
             f"{run['build_jobs']} jobs) {name}",
             file=sys.stderr,
             flush=True,
         )
-        return run
-
-    runs: dict[str, dict] = {}
-    errors: dict[str, str] = {}
-    for name, out in zip(specs, pool_map(one, specs)):
-        if isinstance(out, str):
-            errors[name] = out
-        else:
-            runs[name] = out
+        runs[name] = run
     return runs, errors
 
 

@@ -1,21 +1,19 @@
 #!/usr/bin/env python
-"""OSM XML ingest scale axis (r18; r17 verdict "Next round" #6).
+"""OSM XML ingest at scale: the paper's own ETL, measured.
 
-The reference's own domain — streaming OSM XML into the 5-table star —
-was the one path without a large-scale measurement: parity is proven at
-8 files / 56 MB, but the 100 TB story ("parallelism is per-file; shard
-the extract") was argued, not measured. This probe synthesizes ~100x
-the reference extract (~5 GB across 128 files — the reference input is
-54 MB, Readme.md:137) with a deterministic generator exercising every
-shaping branch (tags with namespace keys, phone/postcode cleaning
-targets, ordered nd refs), runs the REAL ``run_pipeline`` end-to-end
-(XML → shaped → 5 parquet tables), and records:
+Streaming OSM XML into the 5-table star is proven for parity at
+8 files / 56 MB; this run shows it scales. It writes ~100x the reference
+extract (~5 GB across 128 files; the reference input is 54 MB,
+Readme.md:137) with the benchmark's seeded generator
+(``perfbench/gen_osm.py``: dirty phones and postcodes, namespaced and
+problem keys, closed polygons), runs the real ``run_pipeline``
+end-to-end (XML -> shaped -> 5 parquet tables), and records:
 
 1. per-scale walls and MB/s at 8 / 32 / 128 files (same per-file
-   content, so the file-count and byte coefficients separate);
-2. linearity: shaped row counts must equal the generator's closed-form
-   expectations at every scale (a dropped file or partial parse shows
-   up as a count mismatch, not a hunch);
+   shape, so the file-count and byte coefficients separate);
+2. linearity: shaped row counts must equal ``gen_osm.expected_counts``
+   at every scale (a dropped file or partial parse shows up as a count
+   mismatch, not a hunch);
 3. the width-guardrail question: the widest tag value the XML path can
    produce, measured from the shaped tables — OSM attribute/tag values
    are bounded-small, so the crawl-ingest 1 MB width cap
@@ -23,7 +21,9 @@ targets, ordered nd refs), runs the REAL ``run_pipeline`` end-to-end
    source, and the measurement makes that a number instead of a claim.
 
 Usage: python scripts/osm_scale.py [--files N] [--out FILE]
-(default 128 files ~= 5 GB; --files 8 is a quick shake-out)
+(default 128 files ~= 5 GB; --files 8 runs the 8-file scale alone, a
+quick shake-out). Inputs and outputs live under /tmp/osm_scale and are
+deleted after each scale.
 """
 
 from __future__ import annotations
@@ -33,105 +33,22 @@ import os
 import shutil
 import sys
 import time
-from concurrent.futures import ProcessPoolExecutor
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-#: per-file element counts (deterministic): ~40 MB of XML per file
+from perfbench.gen_osm import expected_counts, generate  # noqa: E402
+
+#: per-file element counts: ~40 MB of XML per file
 NODES_PER_FILE = 160_000
 WAYS_PER_FILE = 27_000
-NDS_PER_WAY = 6
-
-#: XML-safe user names (one non-ASCII to exercise encoding; ampersands
-#: would need &amp; escaping — kept out so the generator stays trivially
-#: well-formed)
-_USERS = ["Dutch Mapper", "amster_dan", "grachten_gids", "bike+canal", "Jörg"]
-_AMENITIES = ["restaurant", "cafe", "pub", "fast_food", "bar"]
+SEED = 1
 
 
-def _node(gid: int, j: int) -> str:
-    lat = 52.0 + (gid % 100000) * 1e-5
-    lon = 4.7 + (gid % 90000) * 1e-5
-    user = _USERS[gid % len(_USERS)]
-    ts = f"2016-{(gid % 12) + 1:02d}-{(gid % 28) + 1:02d}T10:{gid % 60:02d}:00Z"
-    head = (
-        f'  <node id="{gid}" lat="{lat:.7f}" lon="{lon:.7f}" '
-        f'user="{user}" uid="{3781654 + (gid % 97)}" version="{(gid % 9) + 1}" '
-        f'changeset="{42679914 + (gid % 1000)}" timestamp="{ts}"'
-    )
-    if j % 5 != 0:
-        return head + "/>\n"
-    # every 5th node carries tags exercising the cleaning branches
-    tags = [
-        f'    <tag k="amenity" v="{_AMENITIES[gid % 5]}"/>\n',
-        f'    <tag k="addr:postcode" v="10{gid % 90 + 10:02d} {"ABCDEFGHKL"[gid % 10]}N"/>\n',
-    ]
-    if j % 15 == 0:
-        tags.append(f'    <tag k="phone" v="+31 20 {gid % 900 + 100} {gid % 9000 + 1000}"/>\n')
-    if j % 25 == 0:
-        tags.append(f'    <tag k="addr:street" v="Prinsengracht {gid % 300}"/>\n')
-    return head + ">\n" + "".join(tags) + "  </node>\n"
-
-
-def _way(gid: int, j: int, node_base: int) -> str:
-    user = _USERS[gid % len(_USERS)]
-    ts = f"2016-{(gid % 12) + 1:02d}-{(gid % 28) + 1:02d}T11:{gid % 60:02d}:00Z"
-    head = (
-        f'  <way id="{gid}" user="{user}" uid="{3781654 + (gid % 97)}" '
-        f'version="{(gid % 9) + 1}" changeset="{42679914 + (gid % 1000)}" '
-        f'timestamp="{ts}">\n'
-    )
-    nds = "".join(
-        f'    <nd ref="{node_base + (gid * 7 + k) % NODES_PER_FILE}"/>\n'
-        for k in range(NDS_PER_WAY)
-    )
-    tags = (
-        f'    <tag k="highway" v="cycleway"/>\n'
-        f'    <tag k="source" v="BAG"/>\n'
-        f'    <tag k="bag:pand" v="{363100012000000 + gid}"/>\n'
-    )
-    return head + nds + tags + "  </way>\n"
-
-
-def gen_file(args: tuple[str, int]) -> int:
-    path, fi = args
-    node_base = fi * 10_000_000
-    way_base = 900_000_000 + fi * 1_000_000
-    chunks: list[str] = ['<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">\n']
-    for j in range(NODES_PER_FILE):
-        chunks.append(_node(node_base + j, j))
-    for j in range(WAYS_PER_FILE):
-        chunks.append(_way(way_base + j, j, node_base))
-    chunks.append("</osm>\n")
-    data = "".join(chunks).encode("utf-8")
-    with open(path, "wb") as f:
-        f.write(data)
-    return len(data)
-
-
-def expected_counts(n_files: int) -> dict[str, int]:
-    """Closed-form shaped-table row counts from the generator shape
-    (default ShapeConfig: problem-key filter on — no generated key is
-    problematic — and way cleaning on)."""
-    # count of j in [0, N) with j % k == 0 is ceil(N/k) — j=0 counts
-    # (the first run at N=160k caught the floor version one short per
-    # file on the %15 term; the linearity gate works)
-    def mult(k: int) -> int:
-        return -(-NODES_PER_FILE // k)
-
-    node_tags = mult(5) * 2 + mult(15) + mult(25)
-    return {
-        "nodes": n_files * NODES_PER_FILE,
-        "nodes_tags": n_files * node_tags,
-        "ways": n_files * WAYS_PER_FILE,
-        "ways_tags": n_files * WAYS_PER_FILE * 3,
-        "ways_nodes": n_files * WAYS_PER_FILE * NDS_PER_WAY,
-    }
-
-
-def run_scale(spark, xml_dir: str, out_dir: str, n_files: int) -> dict:
+def run_scale(
+    spark, xml_dir: str, out_dir: str, n_files: int, in_bytes: int
+) -> dict:
     from pyspark.sql import functions as F
 
     from amsterdam_map_data_wrangling_spark.pipeline import run_pipeline
@@ -141,7 +58,7 @@ def run_scale(spark, xml_dir: str, out_dir: str, n_files: int) -> dict:
     counts = {n: df.count() for n, df in tables.items()}
     wall = round(time.perf_counter() - t0, 2)
 
-    exp = expected_counts(n_files)
+    exp = expected_counts(n_files, NODES_PER_FILE, WAYS_PER_FILE)
     mismatches = {n: (counts[n], exp[n]) for n in exp if counts[n] != exp[n]}
 
     # width-guardrail measurement: the widest value the XML path produced
@@ -151,10 +68,6 @@ def run_scale(spark, xml_dir: str, out_dir: str, n_files: int) -> dict:
             F.max(F.length("value")).alias("mx")
         ).first()["mx"]
 
-    in_bytes = sum(
-        os.path.getsize(os.path.join(xml_dir, f))
-        for f in os.listdir(xml_dir)
-    )
     return {
         "n_files": n_files,
         "input_mb": round(in_bytes / 1e6, 1),
@@ -188,39 +101,28 @@ def main() -> None:
     spark = get_spark(app_name="amdw-osm-scale")
     spark.sparkContext.setLogLevel("ERROR")
 
-    scales = sorted({8, 32, n_full})
+    scales = sorted({s for s in (8, 32) if s < n_full} | {n_full})
     results = {}
     for n in scales:
         xml_dir = os.path.join(base, f"xml_{n}")
-        os.makedirs(xml_dir, exist_ok=True)
         t0 = time.perf_counter()
-        with ProcessPoolExecutor(8) as ex:
-            sizes = list(
-                ex.map(
-                    gen_file,
-                    [
-                        (os.path.join(xml_dir, f"part-{i:04d}.osm"), i)
-                        for i in range(n)
-                    ],
-                )
-            )
+        in_bytes = generate(xml_dir, SEED, n, NODES_PER_FILE, WAYS_PER_FILE)
         gen_wall = round(time.perf_counter() - t0, 1)
         out_dir = os.path.join(base, f"out_{n}")
-        r = run_scale(spark, xml_dir, out_dir, n)
+        r = run_scale(spark, xml_dir, out_dir, n, in_bytes)
         r["gen_wall_s"] = gen_wall
         results[f"files_{n}"] = r
         print(json.dumps(r), file=sys.stderr, flush=True)
         # reclaim disk between scales (keep only findings)
         shutil.rmtree(xml_dir, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)
-        del sizes
 
     # coefficients: per-byte from the largest scale; fixed per-file cost
     # from the small-vs-large MB/s delta
     big = results[f"files_{max(scales)}"]
     small = results[f"files_{min(scales)}"]
     summary = {
-        "axis": "OSM XML ingest at ~100x the reference extract (r18)",
+        "axis": "OSM XML ingest at ~100x the reference extract",
         "reference_input_mb": 54,
         "per_scale": results,
         "throughput_mb_s_full": big["mb_per_s"],

@@ -123,7 +123,8 @@ def test_memo_eviction_is_thread_safe():
     insert now run under the master lock. This hammers the exact
     scenario: the memo pinned at capacity, 16 threads building 2,000
     distinct keys — any KeyError propagates and fails the test — and
-    the bound must hold throughout."""
+    the bound must hold throughout. Afterwards no evicted key may keep
+    its build lock."""
     from amsterdam_map_data_wrangling_spark.plans import dedup
 
     dedup.clear_graph_memo()
@@ -139,4 +140,7 @@ def test_memo_eviction_is_thread_safe():
     with ThreadPoolExecutor(16) as ex:
         list(ex.map(put_many, range(16)))  # re-raises any KeyError
     assert len(dedup._GRAPH_MEMO) == dedup._GRAPH_MEMO_MAX
+    # an evicted key's build lock goes with it
+    leaked = set(dedup._GRAPH_MEMO_LOCKS) - set(dedup._GRAPH_MEMO)
+    assert not leaked, f"{len(leaked)} locks of evicted keys kept"
     dedup.clear_graph_memo()

@@ -10,13 +10,18 @@ that the probe answers are IDENTICAL through a bare local path and a
 or ``gs://`` URI takes — scheme dispatch is pyarrow's), and that every
 unexpected shape stays fail-safe None (callers take the bounded plan —
 the safe direction, plans/queries.py gap_sessionization et al.).
+Through ``CountingHandler``, a counting local filesystem, they also
+bound the metadata calls and reads one probe issues.
 """
 
 from __future__ import annotations
 
+import threading
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyarrow import fs as pafs
 
 from amsterdam_map_data_wrangling_spark.sources.fs import (
     parquet_col_max,
@@ -114,6 +119,114 @@ def test_probe_file_count_budget_fails_safe(tmp_path):
     assert parquet_col_null_frac(str(d), "k") == 0.0
 
 
+class _CountingReadFile:
+    """Local file whose every read() counts as one billable call (one
+    ranged GET on an object store); seek/tell are free."""
+
+    def __init__(self, path: str, handler: "CountingHandler"):
+        self._f = open(path, "rb")
+        self._h = handler
+
+    def read(self, n: int = -1) -> bytes:
+        self._h.tick("read")
+        return self._f.read(n)
+
+    def seek(self, off: int, whence: int = 0) -> int:
+        return self._f.seek(off, whence)
+
+    def tell(self) -> int:
+        return self._f.tell()
+
+    def close(self) -> None:
+        self._f.close()
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def writable(self) -> bool:
+        return False
+
+    @property
+    def closed(self) -> bool:
+        return self._f.closed
+
+
+class CountingHandler(pafs.FileSystemHandler):
+    """Read-only local filesystem that counts, by kind, every metadata
+    call and every post-open read() a probe makes through it."""
+
+    def __init__(self):
+        self.calls: dict[str, int] = {}
+        self._fs = pafs.LocalFileSystem()
+        self._lock = threading.Lock()  # the probe's fan-out pool counts too
+
+    def tick(self, kind: str):
+        with self._lock:
+            self.calls[kind] = self.calls.get(kind, 0) + 1
+
+    @property
+    def total_calls(self) -> int:
+        return sum(self.calls.values())
+
+    def get_type_name(self):
+        return "counting"
+
+    def __eq__(self, other):
+        return self is other
+
+    def __ne__(self, other):
+        return self is not other
+
+    def get_file_info(self, paths):
+        self.tick("stat")
+        return self._fs.get_file_info(paths)
+
+    def get_file_info_selector(self, selector):
+        self.tick("list")
+        return self._fs.get_file_info(selector)
+
+    def open_input_file(self, path):
+        self.tick("open")
+        return pa.PythonFile(_CountingReadFile(path, self), mode="r")
+
+    def open_input_stream(self, path):
+        self.tick("open")
+        return pa.PythonFile(_CountingReadFile(path, self), mode="r")
+
+    def normalize_path(self, path):
+        return self._fs.normalize_path(path)
+
+    def create_dir(self, path, recursive):
+        raise NotImplementedError
+
+    def delete_dir(self, path):
+        raise NotImplementedError
+
+    def delete_dir_contents(self, path, missing_dir_ok=False):
+        raise NotImplementedError
+
+    def delete_root_dir_contents(self):
+        raise NotImplementedError
+
+    def delete_file(self, path):
+        raise NotImplementedError
+
+    def move(self, src, dest):
+        raise NotImplementedError
+
+    def copy_file(self, src, dest):
+        raise NotImplementedError
+
+    def open_append_stream(self, path, metadata):
+        raise NotImplementedError
+
+    def open_output_stream(self, path, metadata):
+        raise NotImplementedError
+
+
 def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
     """r17 object-store latency axis: the probes take an explicit
     ``pyarrow.fs.FileSystem`` (the hook for credentialed stores and the
@@ -121,71 +234,9 @@ def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
     and footer reads fan out through a thread pool (PROBE_FANOUT) —
     order-preserving, so col_max/null_frac see every footer exactly
     once."""
-    from pyarrow import fs as pafs
-
     from amsterdam_map_data_wrangling_spark.sources import fs as fs_mod
 
-    class Counting(pafs.FileSystemHandler):
-        def __init__(self):
-            self.calls = 0
-            self._fs = pafs.LocalFileSystem()
-
-        def get_type_name(self):
-            return "counting"
-
-        def __eq__(self, other):
-            return self is other
-
-        def __ne__(self, other):
-            return self is not other
-
-        def get_file_info(self, paths):
-            self.calls += 1
-            return self._fs.get_file_info(paths)
-
-        def get_file_info_selector(self, selector):
-            self.calls += 1
-            return self._fs.get_file_info(selector)
-
-        def open_input_file(self, path):
-            self.calls += 1
-            return self._fs.open_input_file(path)
-
-        def open_input_stream(self, path):
-            self.calls += 1
-            return self._fs.open_input_stream(path)
-
-        def normalize_path(self, path):
-            return self._fs.normalize_path(path)
-
-        def create_dir(self, path, recursive):
-            raise NotImplementedError
-
-        def delete_dir(self, path):
-            raise NotImplementedError
-
-        def delete_dir_contents(self, path, missing_dir_ok=False):
-            raise NotImplementedError
-
-        def delete_root_dir_contents(self):
-            raise NotImplementedError
-
-        def delete_file(self, path):
-            raise NotImplementedError
-
-        def move(self, src, dest):
-            raise NotImplementedError
-
-        def copy_file(self, src, dest):
-            raise NotImplementedError
-
-        def open_append_stream(self, path, metadata):
-            raise NotImplementedError
-
-        def open_output_stream(self, path, metadata):
-            raise NotImplementedError
-
-    handler = Counting()
+    handler = CountingHandler()
     wrapped = pafs.PyFileSystem(handler)
     assert (
         parquet_col_max(str(parquet_dir), "k", filesystem=wrapped) == 907
@@ -196,9 +247,10 @@ def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
     # The property under test — NOT pyarrow's internal I/O call pattern
     # (r17 ADVICE: the previous exact `calls == 8` pinned pyarrow's
     # open/prefetch behavior; an upgrade could change it with zero repo
-    # regression): the probes issue a BOUNDED number of metadata round
-    # trips (a small constant per file per probe, never a data scan).
-    calls_default = handler.calls
+    # regression): the probes issue a BOUNDED number of round trips,
+    # metadata calls and reads alike (a small constant per file per
+    # probe, never a data scan).
+    calls_default = handler.total_calls
     assert 0 < calls_default <= 32
 
     # fan-out must not change answers OR the I/O issued, even at pool
@@ -209,7 +261,7 @@ def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
     try:
         for fanout in (1, 64):
             fs_mod.PROBE_FANOUT = fanout
-            handler.calls = 0
+            handler.calls.clear()
             assert (
                 parquet_col_max(str(parquet_dir), "k", filesystem=wrapped)
                 == 907
@@ -217,7 +269,7 @@ def test_probes_accept_explicit_filesystem_and_fan_out(parquet_dir):
             assert parquet_col_null_frac(
                 str(parquet_dir), "k", filesystem=wrapped
             ) == pytest.approx(0.4)
-            assert handler.calls == calls_default
+            assert handler.total_calls == calls_default
     finally:
         fs_mod.PROBE_FANOUT = old
 
@@ -331,23 +383,7 @@ def test_probe_true_get_accounting_is_bounded(tmp_path):
     implies at 50 ms/GET is why PROBE_FANOUT is 32: 256 files x 2 GETs
     / 32-wide ~= 1.0 s, under the ~2 s smallest plan delta; 16-wide
     measured 1.74 s — only ~13% headroom
-    (scripts/catalog_latency.py, scripts/archive/catalog_latency_r18)."""
-    import importlib.util
-    import os as _os
-
-    spec = importlib.util.spec_from_file_location(
-        "catalog_latency",
-        _os.path.join(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-            "scripts",
-            "catalog_latency.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from pyarrow import fs as pafs
-
+    (scripts/archive/catalog_latency_r18.json)."""
     from amsterdam_map_data_wrangling_spark.sources import fs as fsmod
 
     d = tmp_path / "acct"
@@ -358,7 +394,7 @@ def test_probe_true_get_accounting_is_bounded(tmp_path):
         pq.write_table(t, d / f"part-{i:05d}.parquet")
 
     for fanout in (1, fsmod.PROBE_FANOUT):
-        handler = mod.ReadLatencyHandler(0.0)
+        handler = CountingHandler()
         wrapped = pafs.PyFileSystem(handler)
         old = fsmod.PROBE_FANOUT
         fsmod.PROBE_FANOUT = fanout
