@@ -186,9 +186,7 @@ def _audit_rows(spark: SparkSession, dst_dir: str) -> int:
         # 1 RTT each) — fanned PROBE_FANOUT wide (r17 latency axis:
         # 64 files @ 50 ms RTT = 3.35 s serial vs 0.31 s fanned)
         from amsterdam_map_data_wrangling_spark.sources.fs import (
-            hadoop_to_pyarrow_uri,
-            pyarrow_fs_for,
-            read_parquet_footers,
+            read_listed_parquet_footers,
         )
 
         targets = [
@@ -198,28 +196,10 @@ def _audit_rows(spark: SparkSession, dst_dir: str) -> int:
         ]
         if not targets:
             return 0
-        # one listing → ONE filesystem (r17 ADVICE: pyarrow_fs_for per
-        # path re-ran FileSystem.from_uri — credential resolution and
-        # client construction — once per output file on remote URIs,
-        # undoing the latency win the fanned footer reads buy). Every
-        # path shares dst_dir's scheme+authority (Hadoop's
-        # Path.toString form), so the fs-path of each sibling is the
-        # same prefix strip the first path established; any layout
-        # violating that assumption raises into the Spark-count
-        # fallback below rather than probing a wrong path.
-        filesystem, p0 = pyarrow_fs_for(targets[0])
-        u0 = hadoop_to_pyarrow_uri(targets[0])
-        if not u0.endswith(p0):
-            raise ValueError(f"cannot derive fs-path prefix from {u0!r}")
-        prefix = u0[: len(u0) - len(p0)]
-        paths = []
-        for p in targets:
-            u = hadoop_to_pyarrow_uri(p)
-            if not u.startswith(prefix):
-                raise ValueError(f"{u!r} outside listing prefix {prefix!r}")
-            paths.append(u[len(prefix):])
+        # one listing → ONE filesystem; a layout the prefix strip cannot
+        # resolve raises into the Spark-count fallback below
         return sum(
-            md.num_rows for md in read_parquet_footers(paths, filesystem)
+            md.num_rows for md in read_listed_parquet_footers(targets)
         )
     except Exception:
         return spark.read.parquet(dst_dir).count()

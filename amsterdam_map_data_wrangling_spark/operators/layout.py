@@ -25,6 +25,14 @@ scan — but only inside the window where it pays:
   way. (Caveat: a non-splittable format — one giant gzip — defeats
   this guard; such inputs should go through the ranged readers in
   ``sources/warc_split.py`` instead.)
+- input that ALREADY scans with >= target row-bearing splits: skip.
+  Spark cuts a file into byte-range splits by size and core count, but
+  a parquet row group is read by the one split holding its midpoint, so
+  the check counts ``min(partitions, total row groups)`` from the
+  footers (:func:`row_bearing_splits`) — a one-row-group file cut four
+  ways is still one busy task. Fallback, when the input is not parquet
+  files or lists more than ``sources/fs.PROBE_MAX_FILES`` of them: the
+  plain partition count.
 
 Catalyst pushes column pruning and predicate pushdown THROUGH the
 repartition (verified in tests/test_layout_floor.py), so the shuffle
@@ -122,13 +130,46 @@ def cpu_parallel_floor(
     # multi-file (or multi-row-group) input may ALREADY scan with >=
     # target tasks, and an unconditional repartition would add a
     # redundant shuffle (round-11 ADVICE). Asking the physical plan for
-    # its partition count costs one extra planning pass, paid only here
-    # — where the alternative was a shuffle. CALLER CONTRACT (r12
-    # ADVICE): apply this operator directly above a file scan (the
-    # registry does exactly that). The .rdd probe converts the plan to
-    # an RDD; under AQE, a plan containing SHUFFLES can materialize
-    # query stages here (run real jobs) — scan-only plans cannot, which
-    # is what keeps this probe a planning pass and not an execution.
-    if df.rdd.getNumPartitions() >= target:
+    # its row-bearing split count (see :func:`row_bearing_splits`)
+    # costs one extra planning pass plus, for parquet, a footer read —
+    # paid only here, where the alternative was a shuffle. CALLER
+    # CONTRACT (r12 ADVICE): apply this operator directly above a file
+    # scan (the registry does exactly that). The .rdd probe converts
+    # the plan to an RDD; under AQE, a plan containing SHUFFLES can
+    # materialize query stages here (run real jobs) — scan-only plans
+    # cannot, which is what keeps this probe a planning pass and not an
+    # execution.
+    if row_bearing_splits(df) >= target:
         return df
     return df.repartition(target)
+
+
+def row_bearing_splits(df: DataFrame) -> int:
+    """How many of ``df``'s scan partitions can carry rows: for a
+    parquet input, ``min(partitions, total row groups)``, with the row
+    groups read from the file footers (metadata only). Spark cuts a
+    file into byte-range splits of ``max(openCostInBytes, bytes /
+    defaultParallelism)`` or less, but a row group belongs to the ONE
+    split holding its midpoint, so a one-row-group file scans as one
+    busy task and N-1 empty ones — measured rows per partition
+    ``[0, 60000, 0, 0]`` for a 16 MB one-row-group file on 4 cores.
+
+    Fallback: the plain partition count, whenever the input is not
+    parquet files (an in-memory relation, another format), lists more
+    than ``sources/fs.PROBE_MAX_FILES`` files, or a footer cannot be
+    read."""
+    from amsterdam_map_data_wrangling_spark.sources.fs import (
+        PROBE_MAX_FILES,
+        hadoop_path_string,
+        read_listed_parquet_footers,
+    )
+
+    partitions = df.rdd.getNumPartitions()
+    files = [hadoop_path_string(u) for u in df.inputFiles()]
+    if not files or len(files) > PROBE_MAX_FILES:
+        return partitions
+    try:
+        footers = read_listed_parquet_footers(files)
+    except Exception:  # noqa: BLE001 - not parquet / unreadable: fall back
+        return partitions
+    return min(partitions, sum(md.num_row_groups for md in footers))

@@ -1,68 +1,110 @@
 """Distributed archive ingestion: crawl dumps and document bundles ship
 as millions of small zip/tar archives, and the scalable read is "one
 task per archive, members exploded to rows" — NOT driver-side
-unpacking. ``spark.read.format("binaryFile")`` distributes the archive
-bytes (one row per file, partitioned by Spark's file splitter), and an
-Arrow-batched ``mapInPandas`` shreds each archive with stdlib
+unpacking. The driver lists the archives (``spark.read.format(
+"binaryFile")``'s file index, no job) and gives EACH archive its own
+input partition; the task reads the archive's bytes through
+``sources/fs.pyarrow_fs_for`` — the package's one scheme-dispatch
+point, so the schemes it maps are the ones supported here — and an
+Arrow-batched ``mapInPandas`` shreds it with stdlib
 ``zipfile``/``tarfile`` into (archive, member, size, payload) rows.
 
+Why not binaryFile's own scan: its file splitter packs small files
+into ``max(openCostInBytes, total bytes / defaultParallelism)``-byte
+partitions, so N archives get one partition each only while N is at
+most the core count — 12 zips on 4 cores scan as 4 tasks, and no
+per-read option bounds that packing. Listing and partitioning by
+archive makes the parallelism a property of the input, not the host.
+
 Scale: archives never aggregate anywhere — each executor opens only its
-own partition's archives from memory (BytesIO, no temp files), so the
-pattern handles any number of archives; per-archive size is bounded by
-executor memory (the binaryFile source's contract). For the opposite
-shape — ONE giant archive that would otherwise be a single straggler
-task — use ``sources/warc_split.py`` (byte-range partitions with record
-boundary synchronization) or ``sources/zip_split.py`` (exact member
-ranges from the zip central directory), the input-format answers.
-Corrupt archives
-either fail loudly (default) or, with ``skip_bad=True``, drop with a
-WARNING — the crawl-ingest reality where a few truncated zips must not
-kill a 100 TB backfill."""
+own archive from memory (BytesIO, no temp files), so the pattern
+handles any number of archives; per-archive size is bounded by executor
+memory. For the opposite shape — ONE giant archive that would otherwise
+be a single straggler task — use ``sources/warc_split.py`` (byte-range
+partitions with record boundary synchronization) or
+``sources/zip_split.py`` (exact member ranges from the zip central
+directory), the input-format answers. Corrupt archives either fail
+loudly (default) or, with ``skip_bad=True``, drop with a WARNING — the
+crawl-ingest reality where a few truncated zips must not kill a 100 TB
+backfill. An archive that cannot be READ (gone, no permission) always
+fails loudly: ``skip_bad`` covers damaged bytes, not missing inputs."""
 
 from __future__ import annotations
 
 import warnings
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from amsterdam_map_data_wrangling_spark.sources.fs import (
+    hadoop_path_string,
+    pyarrow_fs_for,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
 _MEMBER_SCHEMA = "archive string, member string, size long, payload binary"
 
+#: a stdlib-parser kernel over Arrow batches of (path, content) rows
+Shredder = Callable[[Iterator["pd.DataFrame"]], Iterator["pd.DataFrame"]]
 
-def read_zip_members(
-    spark: SparkSession, path: str, skip_bad: bool = False
+
+def _read_file_bytes(path: str) -> bytes:
+    filesystem, fs_path = pyarrow_fs_for(path)
+    with filesystem.open_input_stream(fs_path) as f:
+        return f.read()
+
+
+def _read_archives(
+    spark: SparkSession, path: str, shred: Shredder, schema: str
 ) -> DataFrame:
-    """Read every member of every ``*.zip`` under ``path`` as a row:
-    (archive path, member name, uncompressed size, payload bytes).
-    Directory entries are skipped. With ``skip_bad``, undecodable
-    archives contribute zero rows (and a Python warning) instead of
-    failing the job."""
-    bins = spark.read.format("binaryFile").load(path)
+    """Run ``shred`` over every file under ``path`` (a file, directory
+    or glob, as ``spark.read.format("binaryFile").load`` resolves it)
+    with ONE input partition per archive. The driver only lists; each
+    task reads its own archive's bytes and hands ``shred`` the same
+    (path, content) batch a binaryFile scan would."""
+    uris = spark.read.format("binaryFile").load(path).inputFiles()
+    paths = sorted(hadoop_path_string(u) for u in uris)
+    listed = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(p,) for p in paths], max(1, len(paths))
+        ),
+        "path string",
+    )
+
+    def fetch_and_shred(
+        it: Iterator["pd.DataFrame"],
+    ) -> Iterator["pd.DataFrame"]:
+        yield from shred(
+            pdf.assign(content=[_read_file_bytes(p) for p in pdf["path"]])
+            for pdf in it
+        )
+
+    return listed.mapInPandas(fetch_and_shred, schema)
+
+
+def _member_shredder(
+    members: Callable[[bytes], Iterator[tuple[str, bytes]]], skip_bad: bool
+) -> Shredder:
+    """The Arrow-batched (path, content) → member-rows kernel shared by
+    the zip and tar readers: ``members`` yields (name, bytes) for every
+    file member of one archive."""
 
     def shred(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import zipfile
-
         import pandas as pd
 
         for pdf in it:
-            names, members, sizes, payloads = [], [], [], []
+            names, member_names, sizes, payloads = [], [], [], []
             for apath, content in zip(pdf["path"], pdf["content"]):
                 try:
-                    with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            data = zf.read(info)
-                            names.append(apath)
-                            members.append(info.filename)
-                            sizes.append(len(data))
-                            payloads.append(data)
+                    for name, data in members(content):
+                        names.append(apath)
+                        member_names.append(name)
+                        sizes.append(len(data))
+                        payloads.append(data)
                 except Exception as exc:  # noqa: BLE001 - loud or skip
                     if not skip_bad:
                         raise
@@ -74,61 +116,60 @@ def read_zip_members(
             yield pd.DataFrame(
                 {
                     "archive": names,
-                    "member": members,
+                    "member": member_names,
                     "size": pd.array(sizes, dtype="int64"),
                     "payload": payloads,
                 }
             )
 
-    return bins.select("path", "content").mapInPandas(shred, _MEMBER_SCHEMA)
+    return shred
+
+
+def _zip_members(content: bytes) -> Iterator[tuple[str, bytes]]:
+    import io
+    import zipfile
+
+    with zipfile.ZipFile(io.BytesIO(content)) as zf:
+        for info in zf.infolist():
+            if not info.is_dir():
+                yield info.filename, zf.read(info)
+
+
+def _tar_members(content: bytes) -> Iterator[tuple[str, bytes]]:
+    import io
+    import tarfile
+
+    with tarfile.open(fileobj=io.BytesIO(content)) as tf:
+        for info in tf.getmembers():
+            if info.isfile():
+                f = tf.extractfile(info)
+                yield info.name, (f.read() if f else b"")
+
+
+def read_zip_members(
+    spark: SparkSession, path: str, skip_bad: bool = False
+) -> DataFrame:
+    """Read every member of every ``*.zip`` under ``path`` as a row:
+    (archive path, member name, uncompressed size, payload bytes), with
+    one input partition — one task — per archive. ``archive`` is the
+    archive's Hadoop path string (``file:/dir/a.zip``), the value a
+    binaryFile scan puts in its ``path`` column. Directory entries are
+    skipped. With ``skip_bad``, undecodable archives contribute zero
+    rows (and a Python warning) instead of failing the job."""
+    return _read_archives(
+        spark, path, _member_shredder(_zip_members, skip_bad), _MEMBER_SCHEMA
+    )
 
 
 def read_tar_members(
     spark: SparkSession, path: str, skip_bad: bool = False
 ) -> DataFrame:
     """The tar twin of :func:`read_zip_members` (plain, gz, bz2, xz —
-    whatever stdlib ``tarfile`` sniffs). Same schema and error
-    contract."""
-    bins = spark.read.format("binaryFile").load(path)
-
-    def shred(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import tarfile
-
-        import pandas as pd
-
-        for pdf in it:
-            names, members, sizes, payloads = [], [], [], []
-            for apath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    with tarfile.open(fileobj=io.BytesIO(content)) as tf:
-                        for info in tf.getmembers():
-                            if not info.isfile():
-                                continue
-                            f = tf.extractfile(info)
-                            data = f.read() if f else b""
-                            names.append(apath)
-                            members.append(info.name)
-                            sizes.append(len(data))
-                            payloads.append(data)
-                except Exception as exc:  # noqa: BLE001
-                    if not skip_bad:
-                        raise
-                    warnings.warn(
-                        f"skipping unreadable archive {apath}: {exc}",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-            yield pd.DataFrame(
-                {
-                    "archive": names,
-                    "member": members,
-                    "size": pd.array(sizes, dtype="int64"),
-                    "payload": payloads,
-                }
-            )
-
-    return bins.select("path", "content").mapInPandas(shred, _MEMBER_SCHEMA)
+    whatever stdlib ``tarfile`` sniffs). Same schema, partitioning and
+    error contract."""
+    return _read_archives(
+        spark, path, _member_shredder(_tar_members, skip_bad), _MEMBER_SCHEMA
+    )
 
 
 _WARC_SCHEMA = (
@@ -199,7 +240,7 @@ def _parse_warc(content: bytes) -> list[tuple[str, str, str, int, bytes, bytes |
     return out
 
 
-def _warc_shredder(skip_bad: bool):
+def _warc_shredder(skip_bad: bool) -> Shredder:
     """The Arrow-batched (path, content) → WARC-record-rows kernel,
     shared by the batch reader and the streaming twin
     (``streaming/ingest.stream_warc_records``) so both paths parse
@@ -249,12 +290,10 @@ def read_warc_records(
     every ``*.warc`` / ``*.warc.gz`` under ``path`` as a row
     (archive, record_id, warc_type, target_uri, content_length,
     payload, http_body). Same distribution shape and error contract as
-    :func:`read_zip_members`: one binaryFile row per archive, stdlib
-    parsing in an Arrow-batched pass, loud-or-skip on damage."""
-    bins = spark.read.format("binaryFile").load(path)
-    return bins.select("path", "content").mapInPandas(
-        _warc_shredder(skip_bad), _WARC_SCHEMA
-    )
+    :func:`read_zip_members`: one input partition per listed WARC, its
+    bytes read in the task, stdlib parsing in an Arrow-batched pass,
+    loud-or-skip on damage."""
+    return _read_archives(spark, path, _warc_shredder(skip_bad), _WARC_SCHEMA)
 
 
 def _documents_from_member_rows(
@@ -349,9 +388,9 @@ def documents_from_warc(
     guess. Bodies decode as UTF-8 with replacement (binary→string
     cast), the crawl reality where declared charsets lie.
 
-    Scale: binaryFile scan → Arrow-batched shred → narrow projection;
-    the guardrail's wide branch shuffles only oversized docs' bytes.
-    One task per WARC via :func:`read_warc_records`; for one giant WARC
+    Scale: one task per listed WARC (:func:`read_warc_records`) →
+    Arrow-batched shred → narrow projection; the guardrail's wide
+    branch shuffles only oversized docs' bytes. For one giant WARC
     use sources/warc_split.py and feed its rows to the same projection."""
     recs = read_warc_records(spark, path, skip_bad=skip_bad)
     return _documents_from_member_rows(

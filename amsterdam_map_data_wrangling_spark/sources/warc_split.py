@@ -3,8 +3,8 @@
 ``sources/archives.read_warc_records`` distributes one task per archive
 — the right shape for crawl dumps shipped as millions of ~1 GB WARC
 files, but a single 100 GB WARC is then a straggler by construction
-(and may not fit executor memory at all, since binaryFile materializes
-the whole file as one row).
+(and may not fit executor memory at all, since that reader holds the
+whole file in one task's memory).
 
 This module is the classic input-format remedy, done as a Spark 4
 Python DataSource: partition each WARC by BYTE RANGE and synchronize to

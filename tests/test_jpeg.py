@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import random
+import re
 
 import pytest
 
@@ -335,7 +336,9 @@ def test_jpeg_row_count_parallelism_window(spark, tmp_path):
     assert "RepartitionByExpression" not in plan_small
 
     # firing regime: sf0.1 (5000 rows, 0.6 MB < 4 MiB byte floor) —
-    # hash repartition on doc_id, sized rows // 500 (= 10), not cores
+    # hash repartition on doc_id, sized by the plan's stated rule
+    # min(defaultParallelism, rows // 500): 10 tasks from 5000 rows,
+    # capped by the cores on a host with fewer than 10
     plan_big = (
         QUERIES["jpeg_pixel_stats"]
         .build(spark, "/root/testdata/sf0.1")
@@ -343,8 +346,13 @@ def test_jpeg_row_count_parallelism_window(spark, tmp_path):
         .optimizedPlan()
         .toString()
     )
-    assert "RepartitionByExpression [doc_id" in plan_big
-    assert ", 10" in plan_big  # 5000 rows // 500
+    m = re.search(
+        r"RepartitionByExpression \[doc_id#\d+L?\], (\d+)", plan_big
+    )
+    assert m, plan_big
+    assert int(m.group(1)) == min(
+        spark.sparkContext.defaultParallelism, 5000 // 500
+    )
 
     # above the byte floor the loader already spread the scan: a
     # synthetic 3000-row doc table padded past 4 MiB must NOT get the

@@ -11,6 +11,7 @@ from amsterdam_map_data_wrangling_spark.operators.layout import (
     _max_partition_bytes,
     cpu_parallel_floor,
     input_bytes_of_path,
+    row_bearing_splits,
 )
 from amsterdam_map_data_wrangling_spark.sources.registry import load_tables
 
@@ -130,3 +131,32 @@ def test_loader_floors_cpu_dense_table_inside_window(spark, tmp_path):
         == spark.sparkContext.defaultParallelism
     )
     assert "Repartition" not in _optimized(loaded["orders"])
+
+
+def test_row_bearing_splits_counts_row_groups(spark, tmp_path):
+    # a one-row-group parquet file cut into several byte-range splits
+    # still has ONE split that carries rows; a file with more row groups
+    # than splits is bounded by the splits; a non-file relation falls
+    # back to the partition count.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table({"x": pa.array(range(200_000), type=pa.int64())})
+    one = str(tmp_path / "one_rg.parquet")
+    pq.write_table(t, one, compression="none")
+    many = str(tmp_path / "many_rg.parquet")
+    pq.write_table(t, many, compression="none", row_group_size=10_000)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "200k")
+    try:
+        df_one = spark.read.parquet(one)
+        df_many = spark.read.parquet(many)
+        assert df_one.rdd.getNumPartitions() > 1
+        assert row_bearing_splits(df_one) == 1
+        assert row_bearing_splits(df_many) == min(
+            df_many.rdd.getNumPartitions(), 20
+        )
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    rng = spark.range(10, numPartitions=3)
+    assert row_bearing_splits(rng) == 3
